@@ -3,6 +3,7 @@
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from walk_spark.config import CrawlConfig
@@ -73,3 +74,26 @@ def test_is_webpage_url():
     assert not is_webpage_url("data:text/plain;base64,aGk=")
     assert not is_webpage_url("http://a.com/style.css")
     assert not is_webpage_url("http://a.com/IMG.JPG")
+
+
+class _Untouchable:
+    """Stands in for the session and the pages: any use is a failure, so
+    a config error must be raised before the Crawler starts a Spark job."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"touched .{name} before validating config")
+
+
+def test_crawler_rejects_bad_prefilter_config_up_front():
+    from walk_spark.operators.dedup import BLOOM_BROADCAST_MAX_BYTES
+    from walk_spark.plans.crawl import Crawler
+    # 64 partitions x 64 MB bitsets = 4 GB of filters, over the budget
+    over = CrawlConfig(seeds=["http://self.test"], use_bloom=True,
+                       seen_partitions=64, bloom_num_bits=1 << 29)
+    assert 64 * (1 << 29) // 8 > BLOOM_BROADCAST_MAX_BYTES
+    with pytest.raises(ValueError, match="broadcast budget"):
+        Crawler(_Untouchable(), _Untouchable(), over)
+    with pytest.raises(ValueError, match="unknown seen_filter"):
+        Crawler(_Untouchable(), _Untouchable(),
+                CrawlConfig(seeds=["http://self.test"], use_bloom=True,
+                            seen_filter="quotient"))

@@ -130,6 +130,37 @@ def test_requeued_raw_seed_still_normalized(spark):
     assert by_url["http://mixed.test/ok"]["status"] == "done"
 
 
+def test_unknown_depth0_count_normalizes_seeds(spark):
+    """An UNKNOWN queued depth-0 count (tracker None) must take the
+    normalize-UDF fetch branch: a queued seed whose normal form the driver
+    never recorded is then still matched to its corpus row."""
+    from walk_spark.plans.crawl import Crawler
+    cfg = CrawlConfig(seeds=["HTTP://WWW.Self.test"],
+                      domains=["http://self.test"])
+    c = Crawler(spark, self_linking_pages(spark), cfg)
+    c._ensure_state()
+    c._seed_norms.clear()   # provenance unknown to the driver ...
+    c._d0_queued = None     # ... and so is the depth-0 count
+    r = c.run()
+    seed = r.resources.filter(F.col("url") == "HTTP://WWW.Self.test").first()
+    assert seed["error"] is None and seed["status"] == 200
+    assert r.order.filter(F.col("depth") == 1).count() > 0  # links expanded
+
+
+def test_run_restores_caller_job_description(spark):
+    """run() labels its jobs ss<k>:<phase> but hands the caller's own job
+    description back when it returns."""
+    sc = spark.sparkContext
+    sc.setJobDescription("caller-label")
+    try:
+        crawl(spark, self_linking_pages(spark), CrawlConfig(
+            seeds=["http://self.test"], domains=["http://self.test"],
+            use_bloom=True, bloom_num_bits=65536, seen_partitions=4))
+        assert sc.getLocalProperty("spark.job.description") == "caller-label"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_ignore_patterns(spark):
     cfg = CrawlConfig(
         seeds=["http://self.test"],

@@ -1,9 +1,10 @@
 """Cuckoo-filter URL-seen prefilter (operators.cuckoo) — the north rule's
 "bloom/cuckoo" second filter kind: kernel contracts (no false negatives,
-merge, delete, bounded stash), anti_join_seen equivalence on both probe
-plans, and byte-identical crawls vs the bloom path."""
+merge, delete, bounded stash), anti_join_seen equivalence, and
+byte-identical crawls vs the bloom path."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from walk_spark.config import CrawlConfig
@@ -79,9 +80,9 @@ def test_cuckoo_stash_bounded_at_sized_load():
     assert C.probe_cuckoo_bytes(buf2, overloaded).all()
 
 
-def test_cuckoo_prefilter_equivalence_both_probe_paths(spark):
-    """anti_join_seen with cuckoo filters equals the exact anti-join on
-    BOTH probe plans (broadcast and cogrouped)."""
+def test_cuckoo_prefilter_equivalence(spark):
+    """anti_join_seen with cuckoo filters equals the exact anti-join; an
+    over-budget filter size raises before any probe is planned."""
     seen = spark.range(0, 4000).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
         (F.col("id") % 8).cast("int").alias("part_id"),
@@ -95,11 +96,12 @@ def test_cuckoo_prefilter_equivalence_both_probe_paths(spark):
     bc = {r["url"] for r in D.anti_join_seen(
         cands, seen, filters, filters_bytes=8 * 65536 // 8,
         filter_kind="cuckoo").collect()}
-    cg = {r["url"] for r in D.anti_join_seen(
-        cands, seen, filters, filters_bytes=D.BLOOM_BROADCAST_MAX_BYTES + 1,
-        filter_kind="cuckoo").collect()}
-    assert bc == exact == cg
+    assert bc == exact
     assert len(exact) == 4000
+    with pytest.raises(ValueError, match="broadcast budget"):
+        D.anti_join_seen(cands, seen, filters,
+                         filters_bytes=D.BLOOM_BROADCAST_MAX_BYTES + 1,
+                         filter_kind="cuckoo")
 
 
 def test_cuckoo_crawl_equivalence(spark):

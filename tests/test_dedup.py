@@ -215,3 +215,14 @@ def test_exact_duplicates_capped_group(spark):
     assert r["keep_id"] == 0
     assert list(r["doc_ids"]) == list(range(100))  # smallest ids kept
     assert r["n_overflow"] == 1_000_000 - 100
+
+
+def test_minhash_rejects_bands_not_dividing_k(docs):
+    """k % bands != 0 fails up front with a clear error — not inside the
+    signature UDF when the band hash reshapes (docs, k) into equal bands."""
+    with pytest.raises(ValueError, match="equal bands"):
+        DT.minhash_lsh_pairs(docs, k=128, bands=30)
+    with pytest.raises(ValueError, match="equal bands"):
+        DT.minhash_signatures(docs, k=100, emit_bands=32)
+    with pytest.raises(ValueError, match="equal bands"):
+        DT.lsh_near_dup_verified(docs, k=128, bands=0)

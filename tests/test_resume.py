@@ -2,6 +2,7 @@
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from walk_spark.config import CrawlConfig
@@ -127,7 +128,7 @@ def test_manifest_per_partition_lineage(spark):
 def test_kill_and_resume_identical_with_cuckoo_filter(spark):
     """Resume is filter-kind-agnostic: a killed seen_filter='cuckoo' crawl
     resumes byte-identically (the filters rebuild from the restored
-    frontier via the kind-dispatched _filter_ops, hwm reset included)."""
+    frontier, hwm reset included)."""
     kw = dict(use_bloom=True, seen_filter="cuckoo",
               bloom_num_bits=65536, seen_partitions=4)
     wd = tempfile.mkdtemp()
@@ -139,3 +140,39 @@ def test_kill_and_resume_identical_with_cuckoo_filter(spark):
     r_resumed = c2.run()
     r_full = crawl(spark, pages, _cfg(**kw))
     assert _order_tuples(r_resumed) == _order_tuples(r_full)
+
+
+def test_resume_skips_torn_trailing_manifest_line(spark):
+    """A crawl killed while appending its last manifest line leaves that
+    line torn: resume drops it, redoes the superstep from the last
+    complete record, and the crawl order is byte-identical to the
+    uninterrupted run. The torn bytes are cut from the file, so the
+    resumed run's own lines stay readable."""
+    import json, os
+    wd = tempfile.mkdtemp()
+    pages = tree_site_pages(spark)
+    cfg = dict(host_budget_per_superstep=0)  # BFS depth = few supersteps
+    r_full = Crawler(spark, pages, _cfg(**cfg), workdir=wd).run()
+    n = len(r_full.metrics)
+    want = _order_tuples(r_full)  # before the resume rewrites superstep n
+    path = os.path.join(wd, "manifest.jsonl")
+    with open(path) as f:
+        lines = f.readlines()
+    assert len(lines) == n > 1
+    with open(path, "w") as f:
+        f.write("".join(lines[:-1]) + lines[-1][: len(lines[-1]) // 2])
+    c2 = Crawler.resume(spark, pages, _cfg(**cfg), wd)
+    assert c2.superstep == n - 1
+    r_resumed = c2.run()
+    assert _order_tuples(r_resumed) == want
+    with open(path) as f:
+        recs = [json.loads(x) for x in f]
+    assert [r["superstep"] for r in recs] == list(range(1, n + 1))
+
+
+def test_torn_manifest_line_before_the_last_raises(tmp_path):
+    from walk_spark.plans.crawl import _read_manifest
+    path = tmp_path / "manifest.jsonl"
+    path.write_text('{"superstep": 1}\n{"superst\n{"superstep": 3}\n')
+    with pytest.raises(ValueError):
+        _read_manifest(str(path))

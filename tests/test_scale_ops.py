@@ -202,46 +202,25 @@ def test_bloom_misaligned_num_bits_equivalence(spark):
 
 
 def test_bloom_incremental_merge(spark):
-    """merge_bloom_partitions(old, delta) ≡ build over the union."""
+    """The crawl's driver-side merge of a delta build into the standing
+    filter map ≡ one build over the union, bit for bit — including
+    partitions the standing map has no filter for yet (4 and 5)."""
     a = spark.range(0, 1000).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
         (F.col("id") % 4).cast("int").alias("part_id"),
     )
     b = spark.range(1000, 2000).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        (F.col("id") % 4).cast("int").alias("part_id"),
-    )
-    merged = D.merge_bloom_partitions(
-        D.build_bloom_partitions(a, 1000, 32768),
-        D.build_bloom_partitions(b, 1000, 32768),
-    )
-    full = D.build_bloom_partitions(a.unionByName(b), 1000, 32768)
-    m = {r["part_id"]: r["bf"] for r in merged.collect()}
-    f = {r["part_id"]: r["bf"] for r in full.collect()}
-    assert m == f
-
-
-def test_bloom_delta_merge_matches_two_pass(spark):
-    """merge_bloom_delta(existing, delta) ≡ merge(existing, build(delta))
-    bit-for-bit — the fused one-pass filter maintenance the crawl loop
-    uses must be indistinguishable from the two-pass path."""
-    a = spark.range(0, 1000).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        (F.col("id") % 4).cast("int").alias("part_id"),
-    )
-    b = spark.range(1000, 2000).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        # part 5 has no existing filter row — the fused path must create it
         (F.col("id") % 6).cast("int").alias("part_id"),
     )
-    existing = D.build_bloom_partitions(a, 1000, 32768)
-    fused = D.merge_bloom_delta(existing, b, 32768)
-    two_pass = D.merge_bloom_partitions(
-        existing, D.build_bloom_partitions(b, 1000, 32768)
-    )
-    got = {r["part_id"]: r["bf"] for r in fused.collect()}
-    want = {r["part_id"]: r["bf"] for r in two_pass.collect()}
-    assert got == want
+    standing = D.collect_filters(D.build_bloom_partitions(a, 0, 32768))
+    merged = D.merge_filters(
+        standing, D.collect_filters(D.build_bloom_partitions(b, 0, 32768)))
+    full = D.collect_filters(
+        D.build_bloom_partitions(a.unionByName(b), 0, 32768))
+    assert sorted(merged) == list(range(6))
+    assert merged == full
+    assert sorted(standing) == list(range(4))  # inputs are not modified
 
 
 def test_with_global_seq_bucket_path_matches_range_path(spark):
@@ -297,9 +276,10 @@ def test_bloom_incremental_crawl_equivalence(spark):
         assert a == b
 
 
-def test_bloom_probe_paths_agree(spark):
-    """The broadcast probe (small filters) and the cogrouped probe (scale
-    path) are interchangeable — and both equal the exact anti-join."""
+def test_bloom_probe_rejects_over_budget_filters(spark):
+    """The one probe plan (broadcast filter map) equals the exact
+    anti-join; a filter size over the broadcast budget raises up front
+    instead of planning a probe."""
     seen = spark.range(0, 4000).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
         (F.col("id") % 8).cast("int").alias("part_id"),
@@ -310,10 +290,10 @@ def test_bloom_probe_paths_agree(spark):
     )
     blooms = D.build_bloom_partitions(seen, 1000, 65536)
     exact = {r["url"] for r in D.anti_join_seen(cands, seen).collect()}
-    bc_path = {r["url"] for r in D.anti_join_seen(
+    probed = {r["url"] for r in D.anti_join_seen(
         cands, seen, blooms, filters_bytes=8 * 65536 // 8).collect()}
-    cg_path = {r["url"] for r in D.anti_join_seen(
-        cands, seen, blooms,
-        filters_bytes=D.BLOOM_BROADCAST_MAX_BYTES + 1).collect()}
-    assert bc_path == exact == cg_path
+    assert probed == exact
     assert len(exact) == 4000
+    with pytest.raises(ValueError, match="broadcast budget"):
+        D.anti_join_seen(cands, seen, blooms,
+                         filters_bytes=D.BLOOM_BROADCAST_MAX_BYTES + 1)

@@ -38,8 +38,9 @@ class CrawlConfig:
           replaces the 150-deep queue channel lib/queue.go:33)
       seen_partitions    number of salted-host hash partitions of the seen set
       hot_host_threshold hosts with more queued urls than this get url-salted
-      use_bloom          maintain per-partition bloom prefilters for the
-          seen anti-join (scale path; exact anti-join always confirms)
+      use_bloom          maintain per-partition URL-seen prefilters for the
+          seen anti-join (exact anti-join always confirms, so output is
+          identical on or off)
       max_redirects      redirect chain cap (lib/worker.go:222-224 — 10)
     """
 
@@ -76,15 +77,24 @@ class CrawlConfig:
     hot_hosts: list[str] = field(default_factory=list)
     hot_host_threshold: int = 0  # >0: hosts with more corpus pages than
     #   this are auto-added to hot_hosts at Crawler init (one groupBy)
+    #: ``use_bloom`` keeps its filters as a driver-owned {part_id: bytes}
+    #: map, merged each superstep from a build over the new frontier rows
+    #: and broadcast once to the probe. Their total size, seen_partitions × bloom_num_bits/8,
+    #: must fit dedup.BLOOM_BROADCAST_MAX_BYTES (256 MB) — Crawler(...)
+    #: raises ValueError otherwise, before any Spark job.
     use_bloom: bool = False
+    #: informational only: ``bloom_num_bits`` alone sizes the filters
     bloom_expected_items: int = 1_000_000
+    #: bits per seen-set partition filter (a BYTE budget of bits/8 shared
+    #: by either kind)
     bloom_num_bits: int = 8_388_608
     #: which URL-seen prefilter kind ``use_bloom`` maintains (north rule
     #: "bloom/cuckoo URL-seen"): "bloom" (numpy bitsets, operators.dedup)
     #: or "cuckoo" (fingerprint table, operators.cuckoo — supports
-    #: deletion). Both share the bloom_num_bits BYTE budget (bits/8), the
-    #: same (part_id, bf) table shape and both probe plans; crawls are
-    #: byte-identical across kinds (tests/test_cuckoo.py).
+    #: deletion, used by Crawler.forget_urls). Both share the
+    #: bloom_num_bits byte budget, the same filter map and the one probe
+    #: plan; crawls are byte-identical across kinds (tests/test_cuckoo.py).
+    #: Any other value raises ValueError at Crawler(...).
     seen_filter: str = "bloom"
     #: frontier pick order (north rule "priority queue"): "fifo" (default
     #: — canonical (depth, discovery_seq, url) order, the reference's

@@ -130,8 +130,8 @@ def normalize_url(raw: str) -> str:
     # whenever the step could change anything (and harmlessly true a bit
     # more often) — the guards skip ~all regex/loop work on the typical
     # already-clean url, which doubled the whole extract kernel's
-    # throughput (this function runs once per extracted link; profiled
-    # via tools/profile_superstep.py, equivalence fuzzed over 200k urls).
+    # throughput (this function runs once per extracted link; equivalence
+    # fuzzed over 200k urls).
     # remove directory index (purell: (^|/)(default|index).ext{1,4}$ -> $1)
     if "index." in path or "default." in path:
         path = _RX_DIR_INDEX.sub(r"\1", path)

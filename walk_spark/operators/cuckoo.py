@@ -34,8 +34,11 @@ stays a vanishing fraction (see tests/test_cuckoo.py's load-factor test).
 Space: 16 bits x 4 slots / bucket ⇒ ~19 bits/item at 0.85 load for fpp
 ≈ 2^-13, vs the bloom path's 8 bits/item at fpp ~1%. The crawl sizes both
 from ``CrawlConfig.bloom_num_bits`` (a BYTE budget shared by either kind,
-so ``Crawler._filters_bytes`` and the broadcast-vs-cogroup plan choice are
-filter-kind-agnostic).
+so the filter-map budget check, ``dedup.check_filters_bytes``, is
+filter-kind-agnostic). The crawl keeps the filters as a driver-side
+{part_id: bytes} map: per-superstep deltas merge into it with
+``merge_cuckoo_bytes`` and ``Crawler.forget_urls`` deletes from it with
+``delete_cuckoo_bytes``.
 """
 
 from __future__ import annotations
@@ -313,16 +316,18 @@ def filter_load(buf: bytes) -> tuple[float, int]:
     return float((table != 0).mean()), int(len(stash_b))
 
 
-# -- per-partition DataFrame API (drop-in for the bloom table shape) ----------
+# -- per-partition build (the bloom table shape) -------------------------------
 
 def build_cuckoo_partitions(
     seen: DataFrame,
     expected_items: int,  # noqa: ARG001 — signature parity with bloom
     num_bits: int,
 ) -> DataFrame:
-    """One cuckoo filter per seen-set partition: (part_id, bf binary) —
-    the same table shape ``anti_join_seen`` probes, so the broadcast and
-    cogrouped probe plans apply unchanged."""
+    """One cuckoo filter per seen-set partition: (part_id, bf binary),
+    built on the executors — the same table shape as the bloom kind, so
+    ``dedup.collect_filters`` / ``merge_filters`` / ``anti_join_seen``
+    apply unchanged. Merge and delete then run on the collected bytes
+    (``merge_cuckoo_bytes``, ``delete_cuckoo_bytes``)."""
 
     def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({
@@ -334,49 +339,4 @@ def build_cuckoo_partitions(
         seen.select("part_id", "url")
         .groupBy("part_id")
         .applyInPandas(_build, schema="part_id int, bf binary")
-    )
-
-
-def delete_cuckoo_partitions(filters: DataFrame,
-                             removed: DataFrame) -> DataFrame:
-    """Retract urls from a (part_id, bf) cuckoo filter table: each
-    partition's filter drops one resident fingerprint copy per removed url
-    (``delete_cuckoo_bytes``). ``removed`` is (part_id, url) — rows for
-    partitions with no filter are ignored; filters with no removals pass
-    through unchanged. This is the per-item deletion the bloom kind cannot
-    offer (shared bits) — the operational lever behind
-    ``Crawler.forget_urls``."""
-
-    def _delete(key, f: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if f.empty:
-            return pd.DataFrame({"part_id": [], "bf": []}).astype(
-                {"part_id": "int64"})
-        buf = f["bf"].iloc[0]
-        if not r.empty:
-            buf = delete_cuckoo_bytes(buf, r["url"])
-        return pd.DataFrame({"part_id": [int(key[0])], "bf": [buf]})
-
-    return (
-        filters.groupBy("part_id")
-        .cogroup(removed.select("part_id", "url").groupBy("part_id"))
-        .applyInPandas(_delete, schema="part_id int, bf binary")
-    )
-
-
-def merge_cuckoo_partitions(existing: DataFrame,
-                            added: DataFrame) -> DataFrame:
-    """Union two (part_id, bf) filter tables — the incremental-build path
-    (cost ∝ the delta's resident entries, not total seen)."""
-
-    def _merge(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
-        bufs = list(a["bf"]) + list(b["bf"])
-        acc = bufs[0]
-        for buf in bufs[1:]:
-            acc = merge_cuckoo_bytes(acc, buf)
-        return pd.DataFrame({"part_id": [int(key[0])], "bf": [acc]})
-
-    return (
-        existing.groupBy("part_id")
-        .cogroup(added.groupBy("part_id"))
-        .applyInPandas(_merge, schema="part_id int, bf binary")
     )

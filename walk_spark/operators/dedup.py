@@ -6,26 +6,25 @@ The reference performs one badger point-lookup per candidate URL
   1. within-batch dedup (D1): ``groupBy(url)`` keeping the deterministic
      first discovery (min (parent_depth, parent_seq, ordinal)),
   2. seen anti-join (D2): ``candidates LEFT ANTI JOIN frontier ON url``,
-     optionally prefiltered by per-partition bloom filters so that at
-     10^10-url scale only candidates that *might* be seen reach the exact
-     anti-join; bloom false-positives are corrected by the exact join, so
-     results are identical with the prefilter on or off.
+     optionally prefiltered by per-partition filters so that only
+     candidates that *might* be seen reach the exact anti-join; filter
+     false-positives are corrected by the exact join, so results are
+     identical with the prefilter on or off.
 
 Partitioning: both sides carry ``part_id`` (salted canonical-host hash) so
 the anti-join is an equi-join on (part_id, url) — partition-prunable on an
 Iceberg seen table, and co-partitioned when the frontier is bucketed.
 
-Bloom implementation note: Spark's ``bloom_filter_agg``/``might_contain``
-expressions are internal-only (used by runtime join filters, not registered
-as public SQL functions in Spark 4), so the per-partition filters are numpy
-bitsets built with ``applyInPandas`` over the seen rows. Probing has two
-equivalence-tested plans chosen by the CONFIG-derived filter-table size:
-small tables broadcast to a vectorized pandas UDF (no candidate shuffle);
-big ones (10^10-url scale → GBs of bitsets) go through a cogrouped
-``applyInPandas`` on ``part_id`` where each task sees one partition's
-candidates plus its single bitset row and nothing touches the driver. The
-(part_id, bf) rows are an ordinary DataFrame, rebuilt incrementally per
-partition (``merge_bloom_partitions``).
+Prefilter note: Spark's ``bloom_filter_agg``/``might_contain`` expressions
+are internal-only (used by runtime join filters, not registered as public
+SQL functions in Spark 4), so the per-partition filters are numpy bitsets
+(or cuckoo tables, operators.cuckoo) built with ``applyInPandas`` over the
+seen rows. Their owner keeps them as a driver-side {part_id: bytes} map:
+new seen rows are built into filters on the executors, collected, and
+merged into the map (``merge_filters``). The probe is one plan — the map
+is broadcast to a vectorized pandas UDF, no candidate shuffle — and a map
+larger than ``BLOOM_BROADCAST_MAX_BYTES`` (config-derived) is rejected up
+front.
 """
 
 from __future__ import annotations
@@ -119,15 +118,17 @@ def _probe_bits(bits: np.ndarray, urls) -> np.ndarray:
 
 def build_bloom_partitions(
     seen: DataFrame,
-    expected_items: int,
+    expected_items: int,  # noqa: ARG001 — signature parity with cuckoo
     num_bits: int,
 ) -> DataFrame:
-    """One bloom bitset per seen-set partition: (part_id, bf binary).
+    """One bloom bitset per seen-set partition: (part_id, bf binary),
+    built on the executors. ``num_bits`` alone sizes each bitset;
+    ``expected_items`` does not change the filter.
 
-    The per-partition split keeps each filter's fpp low even at 10^10 urls
-    total (items/partition = total/P) and lets filters be rebuilt
-    incrementally per partition as the crawl grows (see
-    ``merge_bloom_partitions``).
+    The per-partition split keeps each filter's fpp low (items/partition =
+    total/P). The crawl builds over each superstep's NEW seen rows only and
+    ORs the collected bitsets into its driver-owned map
+    (``merge_filters``), so maintenance costs ∝ new urls, not total seen.
     """
     nb = _aligned_bits(num_bits)
 
@@ -147,66 +148,60 @@ def build_bloom_partitions(
     )
 
 
-def merge_bloom_delta(existing: DataFrame, delta: DataFrame,
-                      num_bits: int) -> DataFrame:
-    """OR a (part_id, url) delta directly into the standing (part_id, bf)
-    filters — ``build_bloom_partitions`` + ``merge_bloom_partitions`` fused
-    into ONE cogrouped pass: the delta urls are hashed in the same task
-    that ORs them into the partition's bitset, so the per-superstep filter
-    maintenance pays one shuffle of the delta and one Python pass instead
-    of a build shuffle plus a second cogroup (guide §2.4). Bit-identical to
-    the two-pass path (same hashes, same OR)."""
-    nb = _aligned_bits(num_bits)
+def collect_filters(filters: DataFrame) -> dict[int, bytes]:
+    """A (part_id, bf) filter table as a driver-side {part_id: bytes} map."""
+    return {int(r["part_id"]): bytes(r["bf"]) for r in filters.collect()}
 
-    def _or(key, bf_pdf: pd.DataFrame, url_pdf: pd.DataFrame) -> pd.DataFrame:
-        if bf_pdf.empty:
-            bits = np.zeros(nb // 8, dtype=np.uint8)
+
+def merge_filters(standing: dict, added: dict,
+                  filter_kind: str = "bloom") -> dict:
+    """Union of two {part_id: bytes} filter maps, as a NEW map (neither
+    input is modified, so a caller can merge superstep-local additions
+    into a copy while keeping the standing map). Bloom bitsets OR
+    bytewise; cuckoo tables re-place ``added``'s fingerprints
+    (``merge_cuckoo_bytes``). A partition present in one map only is taken
+    as is. Every url inserted into either input probes maybe-seen in the
+    result — the no-false-negative contract of both kinds."""
+    out = dict(standing)
+    for part, buf in added.items():
+        old = out.get(part)
+        if old is None:
+            out[part] = buf
+        elif filter_kind == "cuckoo":
+            from walk_spark.operators.cuckoo import merge_cuckoo_bytes
+            out[part] = merge_cuckoo_bytes(old, buf)
         else:
-            bits = np.frombuffer(bf_pdf["bf"].iloc[0], dtype=np.uint8).copy()
-            for buf in bf_pdf["bf"].iloc[1:]:
-                bits |= np.frombuffer(buf, dtype=np.uint8)
-        if len(url_pdf):
-            pos = _url_hashes(url_pdf["url"], len(bits) * 8).ravel()
-            np.bitwise_or.at(
-                bits, pos >> np.uint64(3),
-                np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8),
-            )
-        return pd.DataFrame({"part_id": [int(key[0])], "bf": [bits.tobytes()]})
-
-    return (
-        existing.groupBy("part_id")
-        .cogroup(delta.select("part_id", "url").groupBy("part_id"))
-        .applyInPandas(_or, schema="part_id int, bf binary")
-    )
+            out[part] = (np.frombuffer(old, dtype=np.uint8)
+                         | np.frombuffer(buf, dtype=np.uint8)).tobytes()
+    return out
 
 
-def merge_bloom_partitions(existing: DataFrame, added: DataFrame) -> DataFrame:
-    """OR two (part_id, bf) filter tables — the incremental-build path: per
-    superstep only the NEW frontier rows are hashed (build over the delta),
-    then merged into the standing filters. Cost ∝ new urls, not total seen."""
-
-    def _or(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
-        bufs = list(a["bf"]) + list(b["bf"])
-        acc = np.frombuffer(bufs[0], dtype=np.uint8).copy()
-        for buf in bufs[1:]:
-            acc |= np.frombuffer(buf, dtype=np.uint8)
-        return pd.DataFrame({"part_id": [int(key[0])], "bf": [acc.tobytes()]})
-
-    return (
-        existing.groupBy("part_id")
-        .cogroup(added.groupBy("part_id"))
-        .applyInPandas(_or, schema="part_id int, bf binary")
-    )
-
-
-#: filter tables at or below this CONFIG-DERIVED size (seen_partitions ×
-#: num_bits/8 — no data dependence, so the path choice is deterministic
-#: across cluster sizes) are collected + broadcast and probed in-place with
-#: a pandas UDF (no candidate shuffle); larger tables use the cogrouped
-#: shuffle so no multi-GB filter set ever touches the driver.
+#: budget for one filter map (seen_partitions × num_bits/8). Filters live
+#: on the driver and reach the probe as ONE broadcast, so a config above
+#: this fails up front (``check_filters_bytes``) instead of mid-crawl. The
+#: size is CONFIG-derived — no data dependence — so the check gives the
+#: same answer on every cluster.
 BLOOM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
-#: broadcasts created by anti_join_seen's small-filter path, pending
+
+def filter_map_bytes(partitions: int, num_bits: int) -> int:
+    """Config-derived size of a filter map: one byte-aligned ``num_bits``
+    filter per seen-set partition (a cuckoo table fits the same budget)."""
+    return partitions * (_aligned_bits(num_bits) // 8)
+
+
+def check_filters_bytes(n: int) -> None:
+    """Raise ValueError when a filter map of ``n`` bytes exceeds the
+    broadcast budget."""
+    if n > BLOOM_BROADCAST_MAX_BYTES:
+        raise ValueError(
+            f"URL-seen filters of {n} bytes exceed the "
+            f"{BLOOM_BROADCAST_MAX_BYTES}-byte broadcast budget; lower "
+            f"bloom_num_bits or seen_partitions"
+        )
+
+
+#: broadcasts created by anti_join_seen from a filter table, pending
 #: release. A broadcast must outlive the (lazy) probe plan that captures
 #: it, so anti_join_seen can't destroy it itself — callers invoke
 #: release_bloom_broadcasts() once the consuming action has run (the
@@ -234,19 +229,6 @@ def release_bloom_broadcasts(registry: list | None = None) -> int:
     return n
 
 
-def prepare_bloom_broadcast(blooms: DataFrame, registry: list | None = None):
-    """Collect a (part_id, bf) filter table to the driver and broadcast it
-    — the eager half of ``anti_join_seen``'s small-filter path, split out
-    so an owner can run it on a helper thread CONCURRENT with other work
-    (in the crawl loop it overlaps the fetch join + extraction instead of
-    serializing the superstep). The returned broadcast is appended to
-    ``registry`` (default: module list) for later release."""
-    bf_map = {r["part_id"]: r["bf"] for r in blooms.collect()}
-    bc = blooms.sparkSession.sparkContext.broadcast(bf_map)
-    (_PENDING_BROADCASTS if registry is None else registry).append(bc)
-    return bc
-
-
 def _probe_filter_bytes(buf: bytes, urls, filter_kind: str) -> np.ndarray:
     """Dispatch a serialized per-partition filter probe by kind: "bloom"
     (raw bitset, this module) or "cuckoo" (operators.cuckoo — the north
@@ -269,74 +251,49 @@ def anti_join_seen(
 ) -> DataFrame:
     """D2: candidates not present in the seen set (exact url-string match).
 
-    With ``blooms`` (part_id, bf): candidates whose partition filter says
-    "definitely new" skip the exact anti-join entirely, "maybe seen"
-    candidates are confirmed by the (part_id, url) anti-join. Bloom
-    false-positives are corrected by the exact join, so the output is
-    identical with the prefilter on or off.
+    Optional prefilter, either ``blooms`` — a (part_id, bf) table, collected
+    and broadcast here (the broadcast joins ``registry``, default the
+    module list, for later release) — or ``prepared_bc``, a broadcast
+    {part_id: bytes} map the caller owns. Candidates whose partition
+    filter says "definitely new" skip the exact anti-join; "maybe seen"
+    ones are confirmed by the (part_id, url) anti-join. Filter false
+    positives are corrected by the exact join, so the output is identical
+    with the prefilter on or off, for either ``filter_kind``.
 
-    Probe plan, chosen by ``filters_bytes`` (callers compute it from CONFIG
-    — seen_partitions × num_bits/8): small filter tables broadcast to the
-    probe UDF (one vectorized ``_probe_bits`` call per part_id group per
-    Arrow batch, no extra shuffle); at 10^10-url scale the filters are GBs,
-    so a cogrouped ``applyInPandas`` on part_id pairs each candidate
-    partition with its single filter row and nothing touches the driver.
-    An absent part_id row means that partition has no seen urls →
-    definitely new.
+    One probe plan: a vectorized pandas UDF looks each candidate's
+    partition up in the broadcast map (no candidate shuffle); an absent
+    part_id means that partition has no seen urls → definitely new.
+    ``filters_bytes`` (config-derived, ``filter_map_bytes``) above
+    BLOOM_BROADCAST_MAX_BYTES raises ValueError before anything runs.
     """
-    if blooms is None:
+    if filters_bytes is not None:
+        check_filters_bytes(filters_bytes)
+    if blooms is None and prepared_bc is None:
         return candidates.join(
             seen.select("part_id", "url"), ["part_id", "url"], "left_anti"
         )
     cols = list(candidates.columns)
-    use_bcast = (
-        prepared_bc is not None
-        or (filters_bytes is not None
-            and filters_bytes <= BLOOM_BROADCAST_MAX_BYTES)
-    )
-    if use_bcast:
-        # ``prepared_bc``: the caller already collected+broadcast the
-        # filters (typically on a helper thread, off the critical path)
-        # and owns its registration/release
-        bc = (prepared_bc if prepared_bc is not None
-              else prepare_bloom_broadcast(blooms, registry))
+    bc = prepared_bc
+    if bc is None:
+        bc = blooms.sparkSession.sparkContext.broadcast(
+            collect_filters(blooms))
+        (_PENDING_BROADCASTS if registry is None else registry).append(bc)
 
-        def _probe_bc(urls: pd.Series, parts: pd.Series) -> pd.Series:
-            out = np.zeros(len(urls), dtype=bool)
-            m = bc.value
-            pv = parts.to_numpy()
-            for p in np.unique(pv):
-                bf = m.get(int(p))
-                if bf is None:
-                    continue
-                idx = np.nonzero(pv == p)[0]
-                out[idx] = _probe_filter_bytes(bf, urls.iloc[idx],
-                                               filter_kind)
-            return pd.Series(out)
+    def _probe_bc(urls: pd.Series, parts: pd.Series) -> pd.Series:
+        out = np.zeros(len(urls), dtype=bool)
+        m = bc.value
+        pv = parts.to_numpy()
+        for p in np.unique(pv):
+            bf = m.get(int(p))
+            if bf is None:
+                continue
+            idx = np.nonzero(pv == p)[0]
+            out[idx] = _probe_filter_bytes(bf, urls.iloc[idx], filter_kind)
+        return pd.Series(out)
 
-        from pyspark.sql.types import BooleanType
-        mc = F.pandas_udf(_probe_bc, returnType=BooleanType())
-        c = candidates.withColumn("_maybe", mc(F.col("url"), F.col("part_id")))
-    else:
-        out_fields = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in candidates.schema.fields
-        )
-
-        def _probe(key, cand: pd.DataFrame,
-                   bf_pdf: pd.DataFrame) -> pd.DataFrame:
-            if cand.empty:
-                return cand.assign(_maybe=pd.Series([], dtype=bool))
-            if bf_pdf.empty:
-                return cand.assign(_maybe=False)
-            return cand.assign(_maybe=_probe_filter_bytes(
-                bf_pdf["bf"].iloc[0], cand["url"], filter_kind))
-
-        c = (
-            candidates.groupBy("part_id")
-            .cogroup(blooms.groupBy("part_id"))
-            .applyInPandas(_probe, schema=f"{out_fields}, _maybe boolean")
-        )
+    from pyspark.sql.types import BooleanType
+    mc = F.pandas_udf(_probe_bc, returnType=BooleanType())
+    c = candidates.withColumn("_maybe", mc(F.col("url"), F.col("part_id")))
     # `c` feeds TWO branches of the union below. A lazy localCheckpoint
     # makes the probed stream compute once and be read twice within the
     # consumer's job — without it, only the shuffle below the dedup

@@ -194,6 +194,17 @@ def _minhash_params(k: int, seed: int = 42):
     return a, b
 
 
+def _check_bands(k: int, bands: int) -> None:
+    """LSH banding splits the k signature rows into equal bands: reject a
+    split that does not divide k before anything is planned (the band
+    hash's reshape would otherwise fail inside the UDF)."""
+    if bands < 1 or k % bands:
+        raise ValueError(
+            f"k={k} signature rows cannot split into {bands} equal bands "
+            "(need bands >= 1 and k % bands == 0)"
+        )
+
+
 def _band_hash_u64(sigs: "np.ndarray", bands: int) -> "np.ndarray":
     """(docs, k) int64 signature matrix -> (docs, bands) int64 band keys.
 
@@ -231,8 +242,11 @@ def minhash_signatures(docs: DataFrame, k: int = 128, shingle_n: int = 3,
 
     ``emit_bands`` > 0 additionally returns a ``bands`` array<long> column
     of that many per-band keys (``_band_hash_u64``), so the LSH banding
-    needs no JVM-side hash expression over the signature array.
+    needs no JVM-side hash expression over the signature array; it must
+    divide ``k`` (ValueError otherwise).
     """
+    if emit_bands:
+        _check_bands(k, emit_bands)
     a, b = _minhash_params(k, seed)
 
     def _sig_arrays(texts: pd.Series) -> list:
@@ -351,8 +365,10 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 128,
     pages — quadratic inside the bucket) are dropped, and passing
     ``report={}`` fills ``dropped_buckets``/``dropped_rows`` with the drop
     counts (costs one extra aggregation job; the signature pass is pinned so
-    the UDF doesn't run twice).
+    the UDF doesn't run twice). ``bands`` must divide ``k`` (ValueError
+    otherwise).
     """
+    _check_bands(k, bands)
     sigs = minhash_signatures(docs, k=k, shingle_n=shingle_n,
                               id_col=id_col, text_col=text_col, seed=seed,
                               emit_bands=bands)

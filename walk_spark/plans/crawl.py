@@ -130,6 +130,13 @@ class Crawler:
         workdir: str | None = None,
         robots_delays: DataFrame | None = None,
     ) -> None:
+        # bad prefilter config fails here, before any Spark job — not
+        # later on the helper thread that maintains the filters
+        if cfg.seen_filter not in ("bloom", "cuckoo"):
+            raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
+        if cfg.use_bloom:
+            D.check_filters_bytes(D.filter_map_bytes(
+                cfg.seen_partitions, cfg.bloom_num_bits))
         self.spark = spark
         self.cfg = cfg
         self.robots = robots
@@ -227,7 +234,7 @@ class Crawler:
                 set(self._hot_hosts) | set(self._detect_hot_hosts())
             )
         self.metrics: list[dict] = []
-        #: broadcasts this crawler's bloom probes hold, released after each
+        #: broadcasts this crawler's filter probes hold, released after each
         #: superstep's state pin (per-owner registry — a concurrent
         #: Crawler's release can never destroy this one's broadcasts)
         self._bloom_registry: list = []
@@ -274,12 +281,14 @@ class Crawler:
         self._seed_norms: dict[str, str] = {}
         self._seed_norm_df: DataFrame | None = None
         self._streamed_d0 = False
-        #: standing per-partition bloom filters over the seen set (D2 scale
-        #: path): built ONCE from the seed frontier, then merged with each
-        #: superstep's delta (cost ∝ new urls, not total seen — at 10^10
-        #: urls a full rebuild per superstep would dominate the loop)
-        self._blooms: DataFrame | None = None
-        self._bloom_hwm: int = -1  # superstep whose additions are merged
+        #: standing URL-seen prefilter, DRIVER-owned {part_id: filter
+        #: bytes} (cfg.seen_filter kind): built once from the frontier,
+        #: then each superstep merges a build over only the rows enqueued
+        #: since ``_filter_hwm`` (cost ∝ new urls, not total seen). None =
+        #: rebuild from the frontier on next use (start, resume, bloom
+        #: forget_urls).
+        self._filters: dict[int, bytes] | None = None
+        self._filter_hwm: int = -1  # superstep whose additions are merged
         #: hosts throttled next superstep (F12 backoff — lib/job.go:122-132;
         #: the reference's slowdown side is commented out, we define the
         #: canonical behavior: a host that returned a backoff code gets half
@@ -414,8 +423,9 @@ class Crawler:
 
     def _jd(self, label: str) -> None:
         """Thread-local Spark job description — every eager action in the
-        superstep gets a stable label so the UI / REST profile
-        (tools/profile_superstep.py) can attribute stages to loop phases."""
+        superstep gets a stable ``ss<k>:<phase>`` label so the Spark UI /
+        status tracker can attribute stages to loop phases. ``run()``
+        restores the caller's description when it returns."""
         self.spark.sparkContext.setJobDescription(label)
 
     @property
@@ -427,7 +437,7 @@ class Crawler:
 
     def close(self) -> None:
         """Release driver-side resources: the helper thread pool and any
-        bloom broadcasts still pending. Idempotent; run() calls it in a
+        filter broadcasts still pending. Idempotent; run() calls it in a
         finally, and Crawler works as a context manager."""
         if self._pool_inst is not None:
             self._pool_inst.shutdown(wait=True)
@@ -591,148 +601,40 @@ class Crawler:
         )
         return self._chains
 
-    def _update_blooms_pinned(
-        self, frontier: DataFrame | None = None, superstep: int | None = None
-    ) -> DataFrame:
-        """Incremental bloom maintenance over the PREVIOUS superstep's
-        pinned frontier. The filters must be a SUPERSET of the seen set (a
-        missing url is a false negative → duplicate enqueue), so: first
-        call builds from the full pinned frontier; later calls merge only
-        rows enqueued since the last merged superstep.
+    def _build_filters(self, rows: DataFrame) -> dict[int, bytes]:
+        """Filters over ``rows`` (part_id, url) of the configured kind,
+        built per partition on the executors and collected as a
+        {part_id: bytes} map (only partitions with rows appear)."""
+        if self.cfg.seen_filter == "cuckoo":
+            from walk_spark.operators.cuckoo import build_cuckoo_partitions
+            build = build_cuckoo_partitions
+        else:
+            build = D.build_bloom_partitions
+        return D.collect_filters(build(
+            rows.select("part_id", "url"), 0, self.cfg.bloom_num_bits))
+
+    def _update_filters(self, frontier: DataFrame, superstep: int) -> dict:
+        """The one filter maintenance step: build over the rows enqueued
+        since the last merged superstep (the whole frontier on first use)
+        and merge them into the driver-owned map. The filters must be a
+        SUPERSET of the seen set (a missing url is a false negative →
+        duplicate enqueue).
 
         Depends only on state pinned at the END of the last superstep, so
-        the superstep loop submits it to the helper thread at superstep
-        START — the filter merge runs concurrently with the fetch join +
-        extraction instead of serializing after them. The loop passes
-        ``frontier``/``superstep`` captured AT SUBMIT TIME so the helper
-        thread never races a later reassignment of ``self.frontier``."""
-        cfg = self.cfg
-        if frontier is None:
-            frontier = self.frontier
-        if superstep is None:
-            superstep = self.superstep
+        the loop submits it to the helper thread at superstep START — the
+        build overlaps the fetch join + extraction. ``frontier`` is
+        captured AT SUBMIT TIME so the helper thread never races a later
+        reassignment of ``self.frontier``."""
         self._jd(f"ss{superstep}:bloom_merge")
-        items = cfg.bloom_expected_items // cfg.seen_partitions
-        build, merge = self._filter_ops()
-        if self._blooms is None:
-            self._blooms = self._pin(build(
-                frontier.select("part_id", "url"), items,
-                cfg.bloom_num_bits,
-            ))
-            self._bloom_hwm = superstep - 1
-        elif self._bloom_hwm < superstep - 1:
-            delta = frontier.filter(
-                F.col("superstep") > self._bloom_hwm
-            ).select("part_id", "url")
-            if cfg.seen_filter == "bloom":
-                # fused build+merge: one cogrouped pass hashes the delta
-                # urls straight into the standing bitsets (bit-identical;
-                # halves the helper thread's per-superstep filter work).
-                # The cuckoo kind keeps build+merge — its merge re-places
-                # fingerprints, a different kernel.
-                self._blooms = self._pin(D.merge_bloom_delta(
-                    self._blooms, delta, cfg.bloom_num_bits
-                ))
-            else:
-                self._blooms = self._pin(merge(
-                    self._blooms,
-                    build(delta, items, cfg.bloom_num_bits),
-                ))
-            self._bloom_hwm = superstep - 1
-        return self._blooms
-
-    def _filter_ops(self):
-        """(build, merge) for the configured URL-seen prefilter kind —
-        north rule "bloom/cuckoo". Same (part_id, bf) table shape either
-        way, so everything downstream (pin, broadcast-vs-cogroup probe,
-        release) is kind-agnostic."""
-        kind = self.cfg.seen_filter
-        if kind == "cuckoo":
-            from walk_spark.operators import cuckoo as CK
-            return CK.build_cuckoo_partitions, CK.merge_cuckoo_partitions
-        if kind != "bloom":
-            raise ValueError(f"unknown seen_filter {kind!r}")
-        return D.build_bloom_partitions, D.merge_bloom_partitions
-
-    def _filters_bytes(self) -> int:
-        """Total filter-table bytes, CONFIG-derived (seen_partitions ×
-        bits/8) so the probe-plan choice is deterministic across cluster
-        sizes."""
-        return self.cfg.seen_partitions * (
-            (max(self.cfg.bloom_num_bits, 1024) + 7) // 8
-        )
-
-    def _bloom_job(self, frontier: DataFrame, superstep: int):
-        """Helper-thread bloom maintenance: merge the filters, then —
-        when the broadcast probe path applies and nothing superstep-local
-        can still change the filters (no recorded-redirect terminals) —
-        ALSO collect+broadcast them. The collect+broadcast was measured as
-        seconds of driver-serial time per superstep (it never shrinks with
-        executors); here it overlaps the fetch join + extraction, so the
-        main thread pays only a future .result().
-
-        On the broadcast path the driver copy IS the product, so the merge
-        plan is collected DIRECTLY — one job instead of pin-then-collect —
-        and the standing ``_blooms`` table is rebuilt from the collected
-        bytes (a local-relation DataFrame; by the path's own config bound
-        the filters are ≤ BLOOM_BROADCAST_MAX_BYTES, the same budget the
-        broadcast itself pays). The cogroup path keeps the pinned
-        executor-resident table (GB-scale filters never touch the driver)."""
-        cfg = self.cfg
-        use_bc = (not cfg.record_redirects
-                  and self._filters_bytes() <= D.BLOOM_BROADCAST_MAX_BYTES)
-        if not use_bc:
-            return self._update_blooms_pinned(frontier, superstep), None
-        self._jd(f"ss{superstep}:bloom_merge")
-        items = cfg.bloom_expected_items // cfg.seen_partitions
-        build, merge = self._filter_ops()
-        plan = None
-        if self._blooms is None:
-            plan = build(frontier.select("part_id", "url"), items,
-                         cfg.bloom_num_bits)
-        elif self._bloom_hwm < superstep - 1:
-            delta = frontier.filter(
-                F.col("superstep") > self._bloom_hwm
-            ).select("part_id", "url")
-            if cfg.seen_filter == "bloom":
-                plan = D.merge_bloom_delta(self._blooms, delta,
-                                           cfg.bloom_num_bits)
-            else:
-                plan = merge(self._blooms,
-                             build(delta, items, cfg.bloom_num_bits))
-        if plan is not None:
-            rows = [(int(r["part_id"]), bytes(r["bf"]))
-                    for r in plan.collect()]
-            self._blooms = self.spark.createDataFrame(
-                rows, "part_id int, bf binary")
-            self._bloom_hwm = superstep - 1
-            bc = self.spark.sparkContext.broadcast(dict(rows))
-            self._bloom_registry.append(bc)
-            return self._blooms, bc
-        self._jd(f"ss{superstep}:bloom_bcast")
-        bc = D.prepare_bloom_broadcast(self._blooms, self._bloom_registry)
-        return self._blooms, bc
-
-    def _update_blooms(
-        self, redirect_terminals: DataFrame | None,
-        pinned: DataFrame | None = None,
-    ) -> DataFrame:
-        """Full bloom view for this superstep: the pinned base plus
-        redirect terminals created THIS superstep (not yet in the pinned
-        frontier), merged lazily."""
-        cfg = self.cfg
-        items = cfg.bloom_expected_items // cfg.seen_partitions
-        build, merge = self._filter_ops()
-        blooms = pinned if pinned is not None else self._update_blooms_pinned()
-        if redirect_terminals is not None:
-            blooms = merge(
-                blooms,
-                build(
-                    redirect_terminals.select("part_id", "url"), items,
-                    cfg.bloom_num_bits,
-                ),
-            )
-        return blooms
+        if self._filters is None:
+            standing, rows = {}, frontier
+        else:
+            standing = self._filters
+            rows = frontier.filter(F.col("superstep") > self._filter_hwm)
+        self._filters = D.merge_filters(
+            standing, self._build_filters(rows), self.cfg.seen_filter)
+        self._filter_hwm = superstep - 1
+        return self._filters
 
     def _fetch_http(self, batch: DataFrame) -> DataFrame:
         """S2 real mode: live GETs (sources.http_fetch, worker.go:138-228
@@ -815,24 +717,10 @@ class Crawler:
         # (add_seeds_df streams, resumed snapshots) keep the Python
         # filter+union branch; a when() would not help there — Spark
         # extracts Python UDFs into an eval node that runs on every row.
+        # An UNKNOWN depth-0 count (None) takes that safe branch too.
         if self._d0_queued == 0:
             b = batch.withColumn("url_norm", F.col("url"))
-        elif not self._streamed_d0:
-            if not self._seed_norms:
-                b = batch.withColumn("url_norm", F.col("url"))
-            else:
-                if self._seed_norm_df is None:
-                    self._seed_norm_df = self.spark.createDataFrame(
-                        list(self._seed_norms.items()),
-                        "url string, _seed_norm string",
-                    )
-                b = batch.join(
-                    F.broadcast(self._seed_norm_df), "url", "left"
-                ).withColumn(
-                    "url_norm",
-                    F.coalesce(F.col("_seed_norm"), F.col("url")),
-                ).drop("_seed_norm")
-        else:
+        elif self._d0_queued is None or self._streamed_d0:
             seeds0 = batch.filter(F.col("depth") == 0).withColumn(
                 "url_norm", _norm_udf(F.col("url"))
             )
@@ -840,6 +728,20 @@ class Crawler:
                 "url_norm", F.col("url")
             )
             b = seeds0.unionByName(rest)
+        elif not self._seed_norms:
+            b = batch.withColumn("url_norm", F.col("url"))
+        else:
+            if self._seed_norm_df is None:
+                self._seed_norm_df = self.spark.createDataFrame(
+                    list(self._seed_norms.items()),
+                    "url string, _seed_norm string",
+                )
+            b = batch.join(
+                F.broadcast(self._seed_norm_df), "url", "left"
+            ).withColumn(
+                "url_norm",
+                F.coalesce(F.col("_seed_norm"), F.col("url")),
+            ).drop("_seed_norm")
         chains = self._redirect_chains()
         self._hop_rows = None
         if chains is not None:
@@ -1074,11 +976,11 @@ class Crawler:
         the reference's RequestStore is Put/Get/List only,
         lib/request_store.go:11-16). Removes the urls' frontier rows and
         retracts them from the standing URL-seen prefilters:
-        ``seen_filter='cuckoo'`` deletes their fingerprints IN PLACE
-        (the per-item deletion the cuckoo kind exists for); bloom bitsets
-        share bits, so those filters are instead rebuilt from the reduced
-        frontier on next use. The resources/order outputs are an archive
-        log and keep their historical rows. Sized for operational lists
+        ``seen_filter='cuckoo'`` deletes their fingerprints from the
+        driver-owned map (the per-item deletion the cuckoo kind exists
+        for); bloom bitsets share bits, so those filters are instead
+        rebuilt from the reduced frontier on next use. The resources/order
+        outputs are an archive log and keep their historical rows. Sized for operational lists
         (the urls enter the plan as literals); returns rows removed."""
         self._ensure_state()
         urls = list(dict.fromkeys(urls))
@@ -1097,15 +999,24 @@ class Crawler:
         n_q = qrow["n"]
         if self._d0_queued is not None:
             self._d0_queued -= int(qrow["n0"])
-        if self._blooms is not None:
+        if self._filters is not None:
             if self.cfg.seen_filter == "cuckoo":
-                from walk_spark.operators import cuckoo as CK
-                removed = self.frontier.filter(hit).select("part_id", "url")
-                self._blooms = self._pin(
-                    CK.delete_cuckoo_partitions(self._blooms, removed)
-                )
+                from walk_spark.operators.cuckoo import delete_cuckoo_bytes
+                # only rows already merged into the map: deleting a url
+                # that was never inserted could drop another url's
+                # matching fingerprint (a false negative)
+                merged = hit & (F.col("superstep") <= self._filter_hwm)
+                by_part: dict[int, list[str]] = {}
+                for r in self.frontier.filter(merged).select(
+                        "part_id", "url").collect():
+                    by_part.setdefault(int(r["part_id"]), []).append(r["url"])
+                self._filters = {
+                    p: (delete_cuckoo_bytes(buf, by_part[p])
+                        if p in by_part else buf)
+                    for p, buf in self._filters.items()
+                }
             else:
-                self._blooms = None
+                self._filters = None
         self._queued = self._pin(self._queued.filter(~hit))
         self._term_parts = [p.filter(~hit) for p in self._term_parts]
         self._rebuild_frontier_view()
@@ -1136,6 +1047,8 @@ class Crawler:
         # AQE's runtime coalescing of the 64-partition exchanges and its
         # runtime broadcast conversions save more than its per-stage job
         # submissions cost, even at 20k rows. Do not re-try.
+        sc = self.spark.sparkContext
+        caller_jd = sc.getLocalProperty("spark.job.description")
         stop = False
         try:
             while not stop and self.superstep < self.cfg.max_supersteps:
@@ -1161,11 +1074,15 @@ class Crawler:
                         m["wall_s"] + time.monotonic() - t_ck, 3
                     )
                 # the frontier pin above materialized this superstep's
-                # bloom-probe plan — its broadcast can go now (else a
+                # filter-probe plan — its broadcast can go now (else a
                 # long crawl accumulates one broadcast per superstep)
                 D.release_bloom_broadcasts(self._bloom_registry)
             self._flush_parts()
         finally:
+            # the phase labels are thread-local: without this the last
+            # ss<k>:checkpoint label sticks to the caller's thread and
+            # every later job is booked to it
+            sc.setLocalProperty("spark.job.description", caller_jd)
             self.close()
         return CrawlResult(
             frontier=self.frontier,
@@ -1179,12 +1096,12 @@ class Crawler:
         trace: dict[str, float] = {}
         k = self.superstep
         cfg = self.cfg
-        # the pinned bloom merge depends only on LAST superstep's frontier
-        # — start it now on the helper thread so the filter build/merge
+        # the filter update depends only on LAST superstep's frontier —
+        # start it now on the helper thread so the filter build/merge
         # overlaps the fetch join + extraction below instead of
         # serializing after them
         bloom_future = (
-            self._pool.submit(self._bloom_job, self.frontier, k)
+            self._pool.submit(self._update_filters, self.frontier, k)
             if cfg.use_bloom and cfg.crawl else None
         )
         # batch is NOT materialized: its only computed consumer is the fetch
@@ -1497,26 +1414,25 @@ class Crawler:
             )
             cands = D.dedup_within_batch(cands, ("part_id", "url"))
             seen = new_frontier.select("part_id", "url")
-            blooms = None
-            filters_bytes = None
-            prepared_bc = None
+            bc = None
             if cfg.use_bloom:
-                pinned, prepared_bc = bloom_future.result()
-                blooms = self._update_blooms(redirect_terminals, pinned=pinned)
-                trace["bloom_update"] = round(time.monotonic() - t0, 3)
-                # config-derived (deterministic across cluster sizes)
-                filters_bytes = self._filters_bytes()
+                filters = bloom_future.result()
                 if redirect_terminals is not None:
-                    # this superstep's redirect terminals were merged into
-                    # the filters AFTER the helper's collect — its
-                    # broadcast is stale; fall back to collect-at-use
-                    prepared_bc = None
+                    # this superstep's redirect terminals are seen already
+                    # but join the frontier only at this superstep's end:
+                    # merge them into this broadcast's copy only (the next
+                    # update picks them up as frontier rows)
+                    self._jd(f"ss{k}:bloom_merge")
+                    filters = D.merge_filters(
+                        filters, self._build_filters(redirect_terminals),
+                        cfg.seen_filter)
+                trace["bloom_update"] = round(time.monotonic() - t0, 3)
+                bc = self.spark.sparkContext.broadcast(filters)
+                self._bloom_registry.append(bc)
             t_aj = time.monotonic()
             self._jd(f"ss{k}:expand_build")
             fresh = D.anti_join_seen(
-                cands, seen, blooms, filters_bytes,
-                prepared_bc=prepared_bc, registry=self._bloom_registry,
-                filter_kind=self.cfg.seen_filter,
+                cands, seen, prepared_bc=bc, filter_kind=cfg.seen_filter,
             )
             # anti_join_seen's lazy checkpoint materializes the candidate
             # pipeline's shuffle stages here (AQE executes query stages on
@@ -1737,11 +1653,12 @@ class Crawler:
         Identical ordering is guaranteed because all state (including the
         discovery-sequence high-water mark) is in the manifest + parquet.
         ``robots_delays`` is an input table like ``robots`` — pass the same
-        one as the original run (budget overrides re-derive from it)."""
+        one as the original run (budget overrides re-derive from it).
+        A torn trailing manifest line (the crawl was killed mid-append) is
+        dropped and the crawl resumes from the last complete one."""
         c = cls(spark, pages, cfg, robots=robots, workdir=workdir,
                 robots_delays=robots_delays)
-        with open(os.path.join(workdir, "manifest.jsonl")) as f:
-            lines = [json.loads(x) for x in f if x.strip()]
+        lines = _read_manifest(os.path.join(workdir, "manifest.jsonl"))
         if not lines:
             return c
         last = lines[-1]
@@ -1776,6 +1693,31 @@ class Crawler:
                     spark.read.schema(ORDER_SCHEMA).parquet(op)
                 )
         return c
+
+
+def _read_manifest(path: str) -> list[dict]:
+    """The manifest's records, in superstep order. A torn LAST line — a
+    kill during the append — is cut from the file (so the resumed run's
+    appends start on a fresh line) and skipped; a bad line anywhere else
+    is corruption and raises."""
+    with open(path, "rb") as f:
+        lines = f.read().splitlines(keepends=True)
+    recs = []
+    for i, line in enumerate(lines):
+        if not line.strip():
+            continue
+        try:
+            recs.append(json.loads(line))
+        except ValueError:
+            if i < len(lines) - 1:
+                raise
+            with open(path, "r+b") as f:
+                f.truncate(sum(len(x) for x in lines[:-1]))
+            return recs
+    if lines and not lines[-1].endswith(b"\n"):
+        with open(path, "ab") as f:  # complete record, newline lost
+            f.write(b"\n")
+    return recs
 
 
 def crawl(
