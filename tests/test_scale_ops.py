@@ -202,6 +202,25 @@ def test_bloom_misaligned_num_bits_equivalence(spark):
 
 
 def test_bloom_incremental_merge(spark):
+    """merge_filters(build(old), build(delta)) ≡ build over the union."""
+    a = spark.range(0, 1000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 4).cast("int").alias("part_id"),
+    )
+    b = spark.range(1000, 2000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 4).cast("int").alias("part_id"),
+    )
+    merged = D.merge_filters(
+        D.collect_filters(D.build_bloom_partitions(a, 1000, 32768)),
+        D.collect_filters(D.build_bloom_partitions(b, 1000, 32768)),
+    )
+    full = D.collect_filters(
+        D.build_bloom_partitions(a.unionByName(b), 1000, 32768))
+    assert merged == full
+
+
+def test_bloom_delta_merge_matches_two_pass(spark):
     """The crawl's driver-side merge of a delta build into the standing
     filter map ≡ one build over the union, bit for bit — including
     partitions the standing map has no filter for yet (4 and 5)."""
@@ -211,6 +230,7 @@ def test_bloom_incremental_merge(spark):
     )
     b = spark.range(1000, 2000).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        # parts 4 and 5 have no standing filter — the merge must add them
         (F.col("id") % 6).cast("int").alias("part_id"),
     )
     standing = D.collect_filters(D.build_bloom_partitions(a, 0, 32768))
