@@ -97,3 +97,17 @@ def test_crawler_rejects_bad_prefilter_config_up_front():
         Crawler(_Untouchable(), _Untouchable(),
                 CrawlConfig(seeds=["http://self.test"], use_bloom=True,
                             seen_filter="quotient"))
+
+
+def test_saved_config_with_removed_pin_knobs_still_loads():
+    """``pin_width_factor`` and ``pin_rows_per_partition`` are module
+    constants in plans.crawl now; a config saved with them still loads,
+    its other fields intact."""
+    import json
+
+    saved = json.loads(CrawlConfig(seeds=["http://self.test"],
+                                   pin_partitions=6).to_json())
+    saved.update(pin_width_factor=5.0, pin_rows_per_partition=1000)
+    cfg = CrawlConfig.from_json(json.dumps(saved))
+    assert cfg == CrawlConfig(seeds=["http://self.test"], pin_partitions=6)
+    assert not hasattr(cfg, "pin_width_factor")

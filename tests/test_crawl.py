@@ -407,7 +407,7 @@ def test_invalid_corpus_url_does_not_crash_crawl(spark):
 def test_crawl_order_identical_across_pin_widths(spark):
     """Crawl ordering depends only on the (depth, discovery_seq, url) sort,
     never on partition layout: the same job at an explicit narrow width and
-    at the level-proportional auto width (pin_width_factor x cores) must
+    at the level-proportional auto width (plans.crawl.PIN_WIDTH_FACTOR) must
     produce identical order, frontier and sequence numbers. This is the
     determinism contract behind making the width scale with cluster size."""
     def run(**width_kw):
@@ -426,5 +426,5 @@ def test_crawl_order_identical_across_pin_widths(spark):
 
     narrow = run(pin_partitions=4)
     wide = run(pin_partitions=48)
-    auto = run()  # default: pin_width_factor x defaultParallelism
+    auto = run()  # default: data-aware auto width
     assert narrow == wide == auto

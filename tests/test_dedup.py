@@ -223,6 +223,92 @@ def test_minhash_rejects_bands_not_dividing_k(docs):
     with pytest.raises(ValueError, match="equal bands"):
         DT.minhash_lsh_pairs(docs, k=128, bands=30)
     with pytest.raises(ValueError, match="equal bands"):
-        DT.minhash_signatures(docs, k=100, emit_bands=32)
+        DT.minhash_signatures(docs, k=100, bands=32)
     with pytest.raises(ValueError, match="equal bands"):
         DT.lsh_near_dup_verified(docs, k=128, bands=0)
+
+
+def test_jaccard_shingle_pairs(spark, docs):
+    """1-gram shingles are the word set, so n=1 reproduces word-set
+    Jaccard exactly; 3-gram shingles see word order, word sets do not."""
+    def rows(df):
+        return sorted((r["id_a"], r["id_b"], r["jaccard"])
+                      for r in df.collect())
+
+    assert rows(DT.jaccard_shingle_pairs(docs, threshold=0.0, n=1)) == \
+        rows(DT.jaccard_word_pairs(docs, threshold=0.0))
+    swapped = spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon zeta"),
+         (1, "alpha beta gamma delta zeta epsilon")], ["doc_id", "text"])
+    assert rows(DT.jaccard_word_pairs(swapped, threshold=0.0)) == \
+        [(0, 1, 1.0)]
+    # 3-grams: {abg, bgd} shared, {gde, dez} vs {gdz, dze} not -> 2/6
+    assert rows(DT.jaccard_shingle_pairs(swapped, threshold=0.0)) == \
+        [(0, 1, 0.3333)]
+
+
+#: signatures pinned from the per-batch kernels; any change to token
+#: hashing, shingling, segment batching, the min-reduce, the band hash or
+#: the bit vote shows up here
+_GOLDEN_DOCS = [
+    (0, "the quick brown fox jumps over the lazy dog"),
+    (1, "The QUICK  brown fox"), (2, "lorem"), (3, ""), (4, None),
+]
+_GOLDEN_MINHASH = {  # k=8, shingle_n=2, bands=4: doc -> (sig, bands)
+    0: ([208049385566028262, 30703740884574350, 141791099539629413,
+         415060062039362358, 64733601406712121, 361916759738240701,
+         278431095951458367, 220561035611729332],
+        [1974628936401051280, -3723638574901568566, -8280375732635203257,
+         7025138332328210169]),
+    1: ([208049385566028262, 30703740884574350, 141791099539629413,
+         415060062039362358, 64733601406712121, 361916759738240701,
+         601895579537965347, 252192528057408356],
+        [1974628936401051280, -3723638574901568566, -8280375732635203257,
+         -5198809736637811120]),
+    2: ([937076073670536563, 391854285813779657, 1344207220952244846,
+         1987784989710141620, 1076157956058514180, 1397963196910073724,
+         1910870662530817155, 1025254075967714461],
+        [8730273460928207305, 1778636912438121838, -175378938755070820,
+         1070380429334927745]),
+    # no tokens: all-zero signature
+    3: ([0] * 8, [2504793391118441261] * 4),
+    4: ([0] * 8, [2504793391118441261] * 4),
+}
+_GOLDEN_SIMHASH = {0: 3979588399098220570, 1: 3835468261877862402,
+                   2: 1106118699359275439, 3: 0, 4: 0}
+
+
+def test_sketch_signatures_golden(spark):
+    df = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    mh = {r["doc_id"]: (list(r["sig"]), list(r["bands"])) for r in
+          DT.minhash_signatures(df, k=8, shingle_n=2, bands=4).collect()}
+    assert mh == _GOLDEN_MINHASH
+    sh = {r["doc_id"]: r["simhash"]
+          for r in DT.simhash_signatures(df).collect()}
+    assert sh == _GOLDEN_SIMHASH
+
+
+def test_sketch_signatures_golden_across_segments(spark):
+    """400 docs of 400 words: each of the 4 partitions holds ~40k
+    shingles, more than one (k, 32768) MinHash chunk, so documents span
+    several reduceat segments; digests of the default-parameter
+    signatures."""
+    import hashlib
+    import random
+
+    rng = random.Random(11)
+    df = spark.createDataFrame(
+        [(i, " ".join(f"w{rng.randrange(2000)}" for _ in range(400)))
+         for i in range(400)], "doc_id long, text string")
+
+    def digest(rows):
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    mh = [(r["doc_id"], list(r["sig"]), list(r["bands"])) for r in
+          DT.minhash_signatures(df).orderBy("doc_id").collect()]
+    assert digest(mh) == (
+        "da30b2a84664ec4838bac8bf0892299c91bbfa82b437044715b8d619ed777adb")
+    sh = [(r["doc_id"], r["simhash"]) for r in
+          DT.simhash_signatures(df).orderBy("doc_id").collect()]
+    assert digest(sh) == (
+        "3cd898e54f3fbc5e3e773c30e29470483331cd698a589449d42562b520544dbf")

@@ -19,7 +19,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, functions as F
 
 from walk_spark.operators.queries import get_capture
-from walk_spark.operators.sitemap import cdxj_index
+from walk_spark.operators.sitemap import sorted_index_page
 
 #: Go's zero time (time.Time{}) — the "zero" path sentinel
 ZERO_TIME = dt.datetime(1, 1, 1, 0, 0, 0)
@@ -54,7 +54,7 @@ def list_resources(ok_resources: DataFrame, page: int = 0,
                    page_size: int = 25) -> DataFrame:
     """O4: one SURT-ordered index page (the handlers' page/pageSize read
     over SortedIndex, lib/walk.go:130-152)."""
-    return cdxj_index(ok_resources).offset(page * page_size).limit(page_size)
+    return sorted_index_page(ok_resources, page_size, page * page_size)
 
 
 def list_requests(frontier: DataFrame, page: int = 0,

@@ -109,23 +109,15 @@ class CrawlConfig:
     #: superstep pin / fetch-join shuffle width (partitions for the
     #: co-partitioned corpus, per-superstep state pins and batch
     #: repartitions). 0 = auto, DATA-AWARE and LEVEL-PROPORTIONAL: enough
-    #: partitions that each holds ≤ ``pin_rows_per_partition`` corpus rows,
-    #: clamped to [cores, pin_width_factor x cores] — a 4x bigger cluster
-    #: gets up to 4x the partitions (2-3 task waves per core = straggler
-    #: slack) while a small input never pays 3 waves of task overhead.
-    #: Same-window A/B at local[32] (BENCH/BASELINE.md round-5 tuning
-    #: note): at 4M urls width 96 beats width 32 by 1.34x overall / 1.73x
-    #: on the dominant superstep (140 -> 80 s — 125k html rows in one
-    #: partition spill); at 2M urls width 96 LOSES 0.71x (task overhead),
-    #: hence the rows/partition target rather than a blind factor. Set
+    #: partitions that each holds ≤ 50k corpus rows, clamped to
+    #: [cores, 3 x cores] (plans.crawl.PIN_ROWS_PER_PARTITION and
+    #: PIN_WIDTH_FACTOR, with the measured crossover behind them). Set
     #: explicitly to pin the width across cluster sizes (the scaling
     #: protocol's comparability mode). Crawl ORDER is width-independent
     #: either way — ordering depends only on the (depth, discovery_seq,
     #: url) sort, verified by tests/test_crawl.py's two-width test and the
     #: A/B's cross-width order-hash equality at 2M and 4M.
     pin_partitions: int = 0
-    pin_width_factor: float = 3.0
-    pin_rows_per_partition: int = 50_000
     max_redirects: int = 10
     max_supersteps: int = 1000
     #: "corpus" (default): simulated GET via join against the pages table;

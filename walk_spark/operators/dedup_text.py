@@ -94,19 +94,15 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
 
 # -- exact jaccard (oracle path) ---------------------------------------------
 
-def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.5,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Exact word-set Jaccard over all pairs sharing ≥1 token.
-
-
-    tokens -> self-join on token -> |A∩B| -> sizes -> jaccard ≥ threshold.
-    The shared-token join explodes on ubiquitous tokens — fine at oracle
-    scale, replaced by MinHash-LSH at corpus scale.
-    """
+def _jaccard_pairs(docs: DataFrame, tokens: Column, threshold: float,
+                   id_col: str) -> DataFrame:
+    """Exact Jaccard over the distinct ``tokens`` array of each document,
+    for all pairs sharing ≥1 token: explode -> self-join on token -> |A∩B|
+    -> sizes -> jaccard ≥ threshold. The shared-token join explodes on
+    ubiquitous tokens — fine at oracle scale, replaced by MinHash-LSH at
+    corpus scale."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(words(F.col(text_col)))).alias("tok"),
+        F.col(id_col).alias("doc_id"), F.explode(tokens).alias("tok"),
     )
     # three consumers (both join legs + sizes) would each re-tokenize the
     # corpus — pin the exploded token table once
@@ -139,47 +135,145 @@ def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.5,
     )
 
 
+def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.5,
+                       id_col: str = "doc_id",
+                       text_col: str = "text") -> DataFrame:
+    """Exact word-set Jaccard over all pairs sharing ≥1 word."""
+    return _jaccard_pairs(docs, F.array_distinct(words(F.col(text_col))),
+                          threshold, id_col)
+
+
 def jaccard_shingle_pairs(docs: DataFrame, threshold: float = 0.5,
                           n: int = 3, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
     """Exact word-N-GRAM (shingle) Jaccard over all pairs sharing ≥1
     shingle — order-sensitive near-dup detection (word-set jaccard is blind
-    to reordering; 3-gram jaccard is the standard web-dedup metric). Same
-    oracle-path shape as ``jaccard_word_pairs``: explode → self-join →
-    |A∩B| → sizes → threshold. Shingling is JVM-side
-    (functions.text.shingles)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(F.col(text_col), n)).alias("tok"),
-    )
-    # same three-consumer shape as jaccard_word_pairs: pin once
-    toks = toks.localCheckpoint(eager=False)
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+    to reordering; 3-gram jaccard is the standard web-dedup metric).
+    Shingling is JVM-side (functions.text.shingles)."""
+    return _jaccard_pairs(docs, shingles(F.col(text_col), n),
+                          threshold, id_col)
+
+
+# -- shared sketch kernels ---------------------------------------------------
+# The signature UDFs follow the batched-Arrow pattern: one pass tokenizes
+# and hashes a whole Arrow batch, and the per-document reductions run over
+# concatenated segments in a few numpy calls. Elementwise ops and reduction
+# segments are identical to a per-document loop, so signatures are
+# bit-identical to it.
+
+def _token_hashes(texts: pd.Series):
+    """Yield (batch position, uint64 token hashes) for each document with
+    at least one lowercased whitespace token. Token digests (blake2b, 8
+    bytes) are memoized across the batch: web-text vocabulary repeats
+    heavily."""
+    cache: dict[str, int] = {}
+
+    def tok_hash(w: str) -> int:
+        h = cache.get(w)
+        if h is None:
+            h = int.from_bytes(
+                hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest(),
+                "little",
+            )
+            cache[w] = h
+        return h
+
+    for i, t in enumerate(texts):
+        toks = (t or "").lower().split()
+        if toks:
+            yield i, np.fromiter(
+                (tok_hash(w) for w in toks), dtype=np.uint64, count=len(toks)
+            )
+
+
+def _segments(parts: list, budget: int):
+    """Yield (seg, starts, lens, docs) over runs of consecutive
+    ``(doc position, array)`` parts: ``seg`` concatenates a run's arrays,
+    ``starts``/``lens`` delimit each document's segment (reduceat offsets)
+    and ``docs`` holds their positions. A run holds at most ``budget``
+    elements unless a single part is larger, which bounds the reduction's
+    temporaries per task."""
+    i = 0
+    while i < len(parts):
+        j, tot = i + 1, len(parts[i][1])
+        while j < len(parts) and tot + len(parts[j][1]) <= budget:
+            tot += len(parts[j][1])
+            j += 1
+        run = parts[i:j]
+        lens = np.fromiter((len(p) for _, p in run), dtype=np.int64,
+                           count=len(run))
+        starts = np.zeros(len(run), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        docs = np.fromiter((d for d, _ in run), dtype=np.int64,
+                           count=len(run))
+        yield np.concatenate([p for _, p in run]), starts, lens, docs
+        i = j
+
+
+def _report_drops(over: DataFrame, report: dict) -> None:
+    """Fill ``report`` with ``dropped_buckets``/``dropped_rows`` from
+    ``over``: one row per bucket above the cap, with its size ``bsz``."""
+    drop = over.agg(
+        F.count("*").alias("nb"),
+        F.coalesce(F.sum("bsz"), F.lit(0)).alias("nr"),
+    ).first()
+    report["dropped_buckets"] = int(drop["nb"])
+    report["dropped_rows"] = int(drop["nr"])
+
+
+def _bounded_buckets(banded: DataFrame, keys: list[str], member: Column,
+                     max_bucket_size: int,
+                     report: dict | None) -> DataFrame:
+    """(keys..., bsz, members) for the band buckets of ``banded`` that
+    hold at most ``max_bucket_size`` rows; ``members`` collects ``member``
+    in ``doc_id`` order.
+
+    ONE exchange builds the buckets: the row_number window and the
+    conditional collect_list (buffer bounded at the cap — same pattern as
+    exact_duplicates) share the key hash partitioning, so callers explode
+    the within-bucket pairs in-stage. An older shape paid a bucket-size
+    aggregate exchange, a cap join (sort-merge over mostly-singleton
+    buckets — measured 2.9 s of the 5.8 s at sf1.0) and a self-join.
+
+    No silent caps: larger buckets (boilerplate pages — quadratic inside
+    the bucket) are dropped, and a ``report`` dict receives the drop counts
+    (one extra aggregation job over the pinned buckets)."""
+    from pyspark.sql import Window
+    w = Window.partitionBy(*keys).orderBy("doc_id")
+    grouped = (
+        banded.withColumn("_rn", F.row_number().over(w))
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("bsz"),
+            F.collect_list(
+                F.when(F.col("_rn") <= max_bucket_size, member)
+            ).alias("members"),
         )
-        .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                4,
-            ).alias("jaccard"),
+    if report is not None:
+        grouped = grouped.localCheckpoint(eager=False)
+        _report_drops(grouped.filter(F.col("bsz") > max_bucket_size), report)
+    return grouped.filter(F.col("bsz") <= max_bucket_size)
+
+
+def _no_silent_drop(op: str, max_bucket_size: int, report: dict | None,
+                    pairs):
+    """``pairs(report)`` for an operator that claims exact output: with
+    ``report=None`` an internal report is used and an over-cap bucket
+    raises instead of quietly losing true pairs (duplicate-heavy corpora
+    put >cap docs in one band bucket — exactly the pairs the operator
+    exists to find); a caller's ``report`` dict accepts documented
+    drops."""
+    rep = {} if report is None else report
+    out = pairs(rep)
+    if report is None and rep["dropped_buckets"]:
+        raise ValueError(
+            f"{op}: {rep['dropped_buckets']} band buckets over "
+            f"max_bucket_size={max_bucket_size} ({rep['dropped_rows']} "
+            "rows) dropped — output would silently miss true pairs; raise "
+            "max_bucket_size or pass report={} to accept documented drops"
         )
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
+    return out
 
 
 # -- minhash + LSH ------------------------------------------------------------
@@ -233,119 +327,53 @@ def minhash_signatures(docs: DataFrame, k: int = 128, shingle_n: int = 3,
                        id_col: str = "doc_id",
                        text_col: str = "text",
                        seed: int = 42,
-                       emit_bands: int = 0) -> DataFrame:
-    """(doc_id, sig array<long>[k]) — one Arrow UDF pass.
+                       bands: int = 32) -> DataFrame:
+    """(doc_id, sig array<long>[k], bands array<long>[bands]) — one Arrow
+    UDF pass.
 
-    Shingle hashing uses a splitmix-style 64-bit mix of Python's stable
-    md5-based digest per shingle, then k universal-hash rows min-reduced in
-    one numpy matmul-shaped op. ~O(shingles·k) vectorized per batch.
+    Shingle hashes are a polynomial combination of consecutive token
+    hashes (no per-shingle string building); the k universal-hash rows are
+    min-reduced over each document's shingle SET, batched across
+    documents in (k, ≤32768) chunks so the temporary stays ~32 MB per task.
+    Documents without tokens get an all-zero signature.
 
-    ``emit_bands`` > 0 additionally returns a ``bands`` array<long> column
-    of that many per-band keys (``_band_hash_u64``), so the LSH banding
-    needs no JVM-side hash expression over the signature array; it must
-    divide ``k`` (ValueError otherwise).
+    ``bands`` per-band keys (``_band_hash_u64``) come out of the same pass,
+    so LSH banding needs no JVM-side hash expression over the signature
+    array; ``bands`` must divide ``k`` (ValueError otherwise).
     """
-    if emit_bands:
-        _check_bands(k, emit_bands)
+    _check_bands(k, bands)
     a, b = _minhash_params(k, seed)
+    mul = np.uint64(0x9E3779B97F4A7C15)
 
-    def _sig_arrays(texts: pd.Series) -> list:
-        # per-token digests memoized across the batch (web-text vocab repeats
-        # heavily); shingle hashes = vectorized polynomial combination of
-        # consecutive token hashes — no per-shingle string building/hashing.
-        # The k×shingles universal-hash min-reduction (the dominant cost) is
-        # batched across documents: per-doc shingle sets are concatenated and
-        # one (k, chunk) multiply-add-mod feeds np.minimum.reduceat, with the
-        # chunk bounded so the temporary stays ~30 MB per task. Elementwise
-        # ops and reduction segments are identical to the per-doc loop, so
-        # signatures are bit-identical.
-        tok_cache: dict[str, int] = {}
-        A = np.uint64(0x9E3779B97F4A7C15)
-
-        def tok_hash(w: str) -> int:
-            h = tok_cache.get(w)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest(),
-                    "little",
-                )
-                tok_cache[w] = h
-            return h
-
-        n = len(texts)
-        out = [None] * n
-        hv_parts: list[np.ndarray] = []
-        hv_docs: list[int] = []
-        for i, t in enumerate(texts):
-            toks = [w for w in (t or "").lower().split() if w]
-            if not toks:
-                out[i] = np.zeros(k, dtype=np.int64)
-                continue
-            th = np.fromiter(
-                (tok_hash(w) for w in toks), dtype=np.uint64, count=len(toks)
-            )
+    def _sig_bands(texts: pd.Series) -> pd.DataFrame:
+        sets = []
+        for i, th in _token_hashes(texts):
             n_sh = max(len(th) - shingle_n + 1, 1)
             hv = np.zeros(n_sh, dtype=np.uint64)
             for j in range(min(shingle_n, len(th))):
-                hv = hv * A + th[j:j + n_sh]
-            hv_parts.append(np.unique(hv))  # shingles are a SET
-            hv_docs.append(i)
-
-        chunk_budget = 32768  # shingles per (k, chunk) temp: k*32768*8 ≈ 32 MB
-        pos = 0
-        while pos < len(hv_parts):
-            end = pos
-            tot = 0
-            while end < len(hv_parts) and (
-                end == pos or tot + len(hv_parts[end]) <= chunk_budget
-            ):
-                tot += len(hv_parts[end])
-                end += 1
-            seg = np.concatenate(hv_parts[pos:end])
-            lens = np.fromiter(
-                (len(p) for p in hv_parts[pos:end]), dtype=np.int64,
-                count=end - pos,
-            )
-            starts = np.zeros(end - pos, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
+                hv = hv * mul + th[j:j + n_sh]
+            sets.append((i, np.unique(hv)))  # shingles are a SET
+        sigs = np.zeros((len(texts), k), dtype=np.int64)
+        for seg, starts, _, pos in _segments(sets, 32768):
             m = np.multiply(seg[None, :], a[:, None])
             m += b[:, None]
             m %= np.uint64(_MERSENNE)
-            mins = np.minimum.reduceat(m, starts, axis=1)  # (k, docs)
-            sigs = mins.T.astype(np.int64)
-            for j in range(end - pos):
-                out[hv_docs[pos + j]] = sigs[j]
-            pos = end
-        return out
+            sigs[pos] = np.minimum.reduceat(m, starts, axis=1).T
+        return pd.DataFrame({"sig": list(sigs),
+                             "bands": list(_band_hash_u64(sigs, bands))})
 
-    if emit_bands:
-        def _sig_bands(texts: pd.Series) -> pd.DataFrame:
-            out = _sig_arrays(texts)
-            mat = (np.stack(out) if out
-                   else np.zeros((0, k), dtype=np.int64))
-            keys = _band_hash_u64(mat, emit_bands)
-            return pd.DataFrame({"sig": out, "bands": list(keys)})
-
-        schema = StructType([
-            StructField("sig", ArrayType(LongType())),
-            StructField("bands", ArrayType(LongType())),
-        ])
-        udf = F.pandas_udf(_sig_bands, returnType=schema)
-        return _spread(docs).select(
-            F.col(id_col).alias("doc_id"),
-            udf(F.col(text_col)).alias("_sb"),
-        ).select(
-            "doc_id",
-            F.col("_sb.sig").alias("sig"),
-            F.col("_sb.bands").alias("bands"),
-        )
-
-    def _sig(texts: pd.Series) -> pd.Series:
-        return pd.Series(_sig_arrays(texts))
-
-    sig_udf = F.pandas_udf(_sig, returnType=ArrayType(LongType()))
+    schema = StructType([
+        StructField("sig", ArrayType(LongType())),
+        StructField("bands", ArrayType(LongType())),
+    ])
+    udf = F.pandas_udf(_sig_bands, returnType=schema)
     return _spread(docs).select(
-        F.col(id_col).alias("doc_id"), sig_udf(F.col(text_col)).alias("sig")
+        F.col(id_col).alias("doc_id"),
+        udf(F.col(text_col)).alias("_sb"),
+    ).select(
+        "doc_id",
+        F.col("_sb.sig").alias("sig"),
+        F.col("_sb.bands").alias("bands"),
     )
 
 
@@ -358,67 +386,35 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 128,
     """Near-duplicate candidate pairs with estimated jaccard ≥ threshold.
 
     sig -> split into ``bands`` bands of k/bands rows -> hash each band ->
-    explode to (band, bucket) keys -> self-join within buckets -> estimate
+    explode to (band, bucket) keys -> pair within buckets -> estimate
     jaccard as matching-minhash fraction -> threshold.
 
-    No silent caps: buckets larger than ``max_bucket_size`` (boilerplate
-    pages — quadratic inside the bucket) are dropped, and passing
-    ``report={}`` fills ``dropped_buckets``/``dropped_rows`` with the drop
-    counts (costs one extra aggregation job; the signature pass is pinned so
-    the UDF doesn't run twice). ``bands`` must divide ``k`` (ValueError
-    otherwise).
+    Buckets larger than ``max_bucket_size`` are dropped; pass ``report={}``
+    for ``dropped_buckets``/``dropped_rows`` (see ``_bounded_buckets``).
+    ``bands`` must divide ``k`` (ValueError otherwise).
     """
-    _check_bands(k, bands)
     sigs = minhash_signatures(docs, k=k, shingle_n=shingle_n,
                               id_col=id_col, text_col=text_col, seed=seed,
-                              emit_bands=bands)
-    # the signature pass is the expensive Python stage and is now consumed
+                              bands=bands)
+    # the signature pass is the expensive Python stage and is consumed
     # twice (band keys + the estimate attach below): pin it so the UDF runs
     # exactly once regardless of plan shape
     sigs = sigs.localCheckpoint(eager=False)
     # band keys only — the k-long signature array (~1 KB/row) stays OUT of
-    # the banded explode and the (band, bucket) self-join shuffles (guide
-    # §2.3 "project before the exchange"); signatures are re-attached to the
-    # few surviving candidate pairs instead of riding every bucket row.
-    # The keys come precomputed from the signature UDF (emit_bands): equal
-    # band slices collide under any consistent hash, so the candidate
-    # semantics are unchanged (see _band_hash_u64), and the bands×rows
-    # unrolled JVM hash tree this replaces was a per-query codegen cost.
+    # the banded explode and the bucket shuffle (guide §2.3 "project before
+    # the exchange"); signatures are re-attached to the few surviving
+    # candidate pairs instead of riding every bucket row. Equal band slices
+    # collide under any consistent hash, so the precomputed keys give the
+    # same candidates as a JVM hash (see _band_hash_u64).
     banded = sigs.select(
         "doc_id",
         F.posexplode(F.col("bands")).alias("band", "bucket"),
     )
-    # ONE exchange builds the buckets: window count + conditional
-    # collect_list (buffer bounded at max_bucket_size — same pattern as
-    # exact_duplicates) share the (band, bucket) hash partitioning, and the
-    # within-bucket pairs are exploded IN-STAGE. The old shape paid a
-    # bucket-size aggregate exchange, a cap join (sort-merge over
-    # mostly-singleton buckets — measured 2.9 s of the 5.8 s at sf1.0) and
-    # a self-join; all three are gone (guide §2.4 remove shuffles).
-    from pyspark.sql import Window
-    w = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    grouped = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .groupBy("band", "bucket")
-        .agg(
-            F.count("*").alias("bsz"),
-            F.collect_list(
-                F.when(F.col("_rn") <= max_bucket_size, F.col("doc_id"))
-            ).alias("ids"),
-        )
-    )
-    if report is not None:
-        grouped = grouped.localCheckpoint(eager=False)
-        drop = grouped.filter(F.col("bsz") > max_bucket_size).agg(
-            F.count("*").alias("nb"),
-            F.coalesce(F.sum("bsz"), F.lit(0)).alias("nr"),
-        ).first()
-        report["dropped_buckets"] = int(drop["nb"])
-        report["dropped_rows"] = int(drop["nr"])
     cand = (
-        grouped.filter(F.col("bsz") <= max_bucket_size)
-        .select(F.explode("ids").alias("id_a"), F.col("ids"))
-        .select("id_a", F.explode("ids").alias("id_b"))
+        _bounded_buckets(banded, ["band", "bucket"], F.col("doc_id"),
+                         max_bucket_size, report)
+        .select(F.explode("members").alias("id_a"), F.col("members"))
+        .select("id_a", F.explode("members").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -463,27 +459,16 @@ def lsh_near_dup_verified(docs: DataFrame, threshold: float = 0.9,
     noise cannot drop a true pair: at j ≥ 0.9 with the 32×4 default bands,
     P(miss) ≈ (1-j⁴)³² + P(Binom est < 0.7) < 10⁻¹³ — deterministic in
     practice, which is what lets a DuckDB exact-jaccard oracle verify this
-    operator end-to-end."""
-    # Exactness claim => cap drops cannot be silent: with report=None an
-    # internal report is used and an over-cap bucket raises instead of
-    # quietly losing true pairs (duplicate-heavy corpora put >cap docs in
-    # one band bucket — exactly the pairs this operator exists to find).
-    strict = report is None
-    if strict:
-        report = {}
-    cand = minhash_lsh_pairs(
-        docs, threshold=max(threshold - candidate_margin, 0.0), k=k,
-        bands=bands, shingle_n=shingle_n, id_col=id_col, text_col=text_col,
-        max_bucket_size=max_bucket_size, seed=seed, report=report,
+    operator end-to-end. ``report=None`` is strict (``_no_silent_drop``)."""
+    cand = _no_silent_drop(
+        "lsh_near_dup_verified", max_bucket_size, report,
+        lambda rep: minhash_lsh_pairs(
+            docs, threshold=max(threshold - candidate_margin, 0.0), k=k,
+            bands=bands, shingle_n=shingle_n, id_col=id_col,
+            text_col=text_col, max_bucket_size=max_bucket_size, seed=seed,
+            report=rep,
+        ),
     )
-    if strict and report["dropped_buckets"]:
-        raise ValueError(
-            f"lsh_near_dup_verified: {report['dropped_buckets']} band "
-            f"buckets over max_bucket_size={max_bucket_size} "
-            f"({report['dropped_rows']} rows) dropped — output would "
-            "silently miss true pairs; raise max_bucket_size or pass "
-            "report={} to accept documented drops"
-        )
     t = docs.select(
         F.col(id_col).alias("_id"),
         F.array_distinct(words(F.col(text_col))).alias("_toks"),
@@ -507,65 +492,24 @@ def lsh_near_dup_verified(docs: DataFrame, threshold: float = 0.9,
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash long): 64-bit SimHash over word tokens (numpy)."""
+    """(doc_id, simhash long): 64-bit SimHash over word tokens (numpy).
+
+    The 64-bit vote is an int8 bit matrix per chunk of ≤512k tokens
+    (~32 MB), reduced per document with np.add.reduceat; sign(votes) is
+    decided on integers (2*ones > n_tokens ⟺ sum(±1) > 0). Documents
+    without tokens get 0."""
+    sh = np.arange(64, dtype=np.uint64)[None, :]
+    pows = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
     def _sim(texts: pd.Series) -> pd.Series:
-        # batched: token hashes for the whole batch are concatenated, the
-        # 64-bit vote matrix is built once per chunk (int8 bit matrix,
-        # chunked to bound the temporary), and per-doc votes come from
-        # np.add.reduceat. sign(votes) is decided on integers (2*ones >
-        # n_tokens ⟺ sum(±1) > 0), so signatures are bit-identical to the
-        # per-document loop.
-        tok_cache: dict[str, int] = {}
-
-        def tok_hash(w: str) -> int:
-            h = tok_cache.get(w)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest(),
-                    "little",
-                )
-                tok_cache[w] = h
-            return h
-
-        n = len(texts)
-        out = np.zeros(n, dtype=np.int64)
-        parts: list[np.ndarray] = []
-        part_docs: list[int] = []
-        for i, t in enumerate(texts):
-            toks = [w for w in (t or "").lower().split() if w]
-            if not toks:
-                continue
-            parts.append(np.fromiter(
-                (tok_hash(w) for w in toks), dtype=np.uint64, count=len(toks)
-            ))
-            part_docs.append(i)
-
-        sh = np.arange(64, dtype=np.uint64)[None, :]
-        pows = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-        chunk_budget = 1 << 19  # tokens per chunk: 512k×64 int8 ≈ 32 MB
-        pos = 0
-        while pos < len(parts):
-            end = pos
-            tot = 0
-            while end < len(parts) and (
-                end == pos or tot + len(parts[end]) <= chunk_budget
-            ):
-                tot += len(parts[end])
-                end += 1
-            seg = np.concatenate(parts[pos:end])
-            lens = np.fromiter(
-                (len(p) for p in parts[pos:end]), dtype=np.int64,
-                count=end - pos,
-            )
-            starts = np.zeros(end - pos, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
+        out = np.zeros(len(texts), dtype=np.int64)
+        for seg, starts, lens, pos in _segments(list(_token_hashes(texts)),
+                                                1 << 19):
             bits = ((seg[:, None] >> sh) & np.uint64(1)).astype(np.int8)
             ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-            signs = (2 * ones) > lens[:, None]  # ⟺ (2*bits-1).sum > 0
+            signs = (2 * ones) > lens[:, None]
             packed = (signs.astype(np.uint64) * pows[None, :]).sum(axis=1)
-            out[np.asarray(part_docs[pos:end])] = packed.view(np.int64)
-            pos = end
+            out[pos] = packed.view(np.int64)
         return pd.Series(out)
 
     udf = F.pandas_udf(_sim, returnType=LongType())
@@ -610,17 +554,17 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     """Pairs with hamming(simhash) ≤ max_hamming via pigeonhole blocking
     (``_simhash_block_keys``: 2-block combination keys — complete for any
     ``max_hamming``, with ~2×-wider band keys than the classic 1-block
-    split so random bucket collisions stay tiny). Join per band, verify
-    with bit_count BEFORE the pair-dedup exchange, so only true near-pairs
-    are ever shuffled (hamming is a pure function of the two signatures, so
-    filter-then-dedup ≡ dedup-then-filter).
+    split so random bucket collisions stay tiny). Pairs explode inside
+    each bucket and are verified with bit_count BEFORE the pair-dedup
+    exchange, so only true near-pairs are ever shuffled (hamming is a pure
+    function of the two signatures, so filter-then-dedup ≡
+    dedup-then-filter).
 
-    Band buckets larger than ``max_bucket_size`` (a boilerplate band value
-    shared by millions of pages goes quadratic) are dropped; pass
+    Band buckets larger than ``max_bucket_size`` are dropped; pass
     ``report={}`` to receive ``dropped_buckets``/``dropped_rows``."""
     sigs = simhash_signatures(docs, id_col=id_col, text_col=text_col)
-    # three consumers below (bucket sizes, both self-join legs) would each
-    # re-run the signature UDF — 16 bytes/row, pin it once
+    # 16 bytes/row: pin it so the signature UDF runs once whatever the
+    # plan shape
     sigs = sigs.localCheckpoint(eager=False)
     banded = sigs.select(
         "doc_id", "simhash",
@@ -628,34 +572,11 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
             F.array(*_simhash_block_keys(F.col("simhash"), max_hamming))
         ).alias("band", "key"),
     )
-    # ONE exchange builds the buckets (window count + bounded collect_list
-    # sharing the (band, key) partitioning — see minhash_lsh_pairs), pairs
-    # explode in-stage, and the bit_count verify runs BEFORE the pair-dedup
-    # exchange, so only true near-pairs are ever shuffled.
-    from pyspark.sql import Window
-    w = Window.partitionBy("band", "key").orderBy("doc_id")
-    grouped = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .groupBy("band", "key")
-        .agg(
-            F.count("*").alias("bsz"),
-            F.collect_list(
-                F.when(F.col("_rn") <= max_bucket_size,
-                       F.struct("doc_id", "simhash"))
-            ).alias("members"),
-        )
-    )
-    if report is not None:
-        grouped = grouped.localCheckpoint(eager=False)
-        drop = grouped.filter(F.col("bsz") > max_bucket_size).agg(
-            F.count("*").alias("nb"),
-            F.coalesce(F.sum("bsz"), F.lit(0)).alias("nr"),
-        ).first()
-        report["dropped_buckets"] = int(drop["nb"])
-        report["dropped_rows"] = int(drop["nr"])
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        grouped.filter(F.col("bsz") <= max_bucket_size)
+        _bounded_buckets(banded, ["band", "key"],
+                         F.struct("doc_id", "simhash"), max_bucket_size,
+                         report)
         .select(F.explode("members").alias("a"), F.col("members"))
         .select("a", F.explode("members").alias("b"))
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -679,23 +600,15 @@ def simhash_exact_dups(docs: DataFrame, id_col: str = "doc_id",
     they collide in every band), and the md5-fingerprint equality check
     discards hamming-0 hash collisions between different texts. The output
     is therefore exactly the fingerprint-equality pair set — SQL-verifiable
-    — while the join never leaves the simhash band buckets."""
-    # Same no-silent-drop contract as lsh_near_dup_verified: report=None
-    # means strict — over-cap band buckets raise rather than lose pairs.
-    strict = report is None
-    if strict:
-        report = {}
-    pairs = simhash_pairs(docs, max_hamming=0, id_col=id_col,
-                          text_col=text_col, max_bucket_size=max_bucket_size,
-                          report=report)
-    if strict and report["dropped_buckets"]:
-        raise ValueError(
-            f"simhash_exact_dups: {report['dropped_buckets']} band buckets "
-            f"over max_bucket_size={max_bucket_size} "
-            f"({report['dropped_rows']} rows) dropped — output would "
-            "silently miss true duplicate pairs; raise max_bucket_size or "
-            "pass report={} to accept documented drops"
-        )
+    — while the join never leaves the simhash band buckets.
+    ``report=None`` is strict (``_no_silent_drop``)."""
+    pairs = _no_silent_drop(
+        "simhash_exact_dups", max_bucket_size, report,
+        lambda rep: simhash_pairs(
+            docs, max_hamming=0, id_col=id_col, text_col=text_col,
+            max_bucket_size=max_bucket_size, report=rep,
+        ),
+    )
     fp = docs.select(
         F.col(id_col).alias("_id"),
         fingerprint_md5(F.col(text_col)).alias("_fp"),

@@ -1,5 +1,5 @@
-"""Frontier state: schemas, deterministic sequence assignment, salted
-host partitioning.
+"""Frontier state: schemas and deterministic sequence assignment (the
+salted host partitioning of the seen set is ``Crawler._part_id_col``).
 
 The frontier DataFrame replaces the reference's ``RequestStore`` +
 ``MemQueue`` pair (lib/request_store.go:18-163, lib/queue.go:22-72): one row
@@ -55,28 +55,6 @@ def canonical_host_col(url: Column) -> Column:
     return F.coalesce(F.regexp_replace(h, r"^www\.", ""), F.lit(""))
 
 
-def part_id_col(host: Column, url: Column, num_partitions: int,
-                hot_hosts: DataFrame | None = None) -> Column:
-    """Salted-hash partition id for the seen set (north rule): hash the
-    canonical host so each host's urls co-locate (politeness + dedup both
-    group by host), except hot hosts, which are salted by full url so one
-    giant host cannot pin a partition. ``hot_hosts`` is a tiny broadcast
-    list; callers join it and pass its flag column instead when dynamic."""
-    return F.pmod(F.xxhash64(host), F.lit(num_partitions)).cast("int")
-
-
-def salted_part_id(df: DataFrame, num_partitions: int,
-                   hot_flag: str | None = None) -> DataFrame:
-    """Attach part_id; rows flagged hot are salted by url, not host."""
-    by_host = F.pmod(F.xxhash64(F.col("host")), F.lit(num_partitions))
-    by_url = F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions))
-    expr = (
-        F.when(F.col(hot_flag), by_url).otherwise(by_host)
-        if hot_flag else by_host
-    )
-    return df.withColumn("part_id", expr.cast("int"))
-
-
 def with_global_seq(
     df: DataFrame,
     sort_cols: list[str],
@@ -85,7 +63,6 @@ def with_global_seq(
     num_partitions: int | None = None,
     return_count: bool = False,
     materialize: bool = True,
-    trace: dict | None = None,
     bucket: Column | None = None,
 ):
     """Assign a dense global sequence 0..n-1 in ``sort_cols`` order —
@@ -122,8 +99,6 @@ def with_global_seq(
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     cols = [F.col(c) for c in sort_cols]
-    import time as _time
-    _t = _time.monotonic()
     if bucket is not None:
         # deterministic monotone bucketing: one pin, no sampling, and the
         # window's own hash exchange on _pid does the physical movement
@@ -132,8 +107,6 @@ def with_global_seq(
         d = d0 = df.withColumn("_pid", bucket.cast("long")).localCheckpoint(
             eager=True
         )
-        if trace is not None:
-            trace["seq_input_pin"] = round(_time.monotonic() - _t, 3)
     else:
         # pin the INPUT first: repartitionByRange samples its input with an
         # extra pass, so an unpinned upstream pipeline (candidate explode +
@@ -144,21 +117,13 @@ def with_global_seq(
         # (observed: non-dense ranks). The second pin only shuffles the
         # already-pinned narrow rows.
         d0 = df.localCheckpoint(eager=True)
-        if trace is not None:
-            trace["seq_input_pin"] = round(_time.monotonic() - _t, 3)
-            _t = _time.monotonic()
         d = d0.repartitionByRange(num_partitions, *cols).withColumn(
             "_pid", F.spark_partition_id()
         ).localCheckpoint(eager=True)
-        if trace is not None:
-            trace["seq_rank_pin"] = round(_time.monotonic() - _t, 3)
-    _t = _time.monotonic()
     counts = {
         r["_pid"]: r["cnt"]
         for r in d.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
-    if trace is not None:
-        trace["seq_counts"] = round(_time.monotonic() - _t, 3)
     offsets, acc = {}, start
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -186,6 +151,3 @@ def with_global_seq(
     # the total back so callers don't pay a separate count() job
     return (out, total) if return_count else out
 
-
-def empty_frontier(spark) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)

@@ -9,13 +9,9 @@ Equivalence contract (SURVEY.md §7 risks): same visit SET and same BFS
 frontier per depth under the same budget — scheduling jitter is not
 replicated, the reference's own interleaving being racy.
 
-Two implementations:
-- ``pick_budget_window`` (default): skew-proof two-phase top-k — rank within
-  (host, salt) buckets first, then within host over the ≤ budget*S
-  survivors. A hot host with 10^8 queued urls never lands in one task.
-- ``pick_budget_pandas``: groupBy(host).applyInPandas round — the literal
-  north-rule shape, kept for parity testing and as the extension point for
-  richer per-host schedulers (adaptive backoff, crawl-delay carryover).
+``pick_budget_window`` is a skew-proof two-phase top-k: rank within
+(host, salt) buckets first, then within host over the ≤ budget*S
+survivors. A hot host with 10^8 queued urls never lands in one task.
 
 Robots gating: a rules table (host, disallow_prefix) anti-joined against
 candidates before enqueue. Matches by canonical host + path prefix.
@@ -99,18 +95,6 @@ def pick_budget_window(queued: DataFrame, budget: int,
     if budget_overrides is not None:
         out = out.drop("_bh", "_bb")
     return out
-
-
-def pick_budget_pandas(queued: DataFrame, budget: int) -> DataFrame:
-    """applyInPandas variant: one scheduling round per host group."""
-    if budget <= 0:
-        return queued
-    schema = queued.schema
-
-    def _pick(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.sort_values(ORDER_COLS).head(budget)
-
-    return queued.groupBy("host").applyInPandas(_pick, schema=schema)
 
 
 def cap_batch(batch: DataFrame, max_batch_size: int,

@@ -22,16 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to default parallelism when the input has
-    fewer partitions: a single small parquet file otherwise pins the
-    signature UDF pass to one task/core (guide §2/§4). No-op for inputs
-    that already have enough partitions."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n)
+from walk_spark.operators.dedup_text import _report_drops, _spread
 
 
 def _dot_with_lit(vec_col, qvec: list[float]):
@@ -278,17 +269,12 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     wsz = Window.partitionBy("band", "bucket")
     b = b.withColumn("bsz", F.count("*").over(wsz))
     if report is not None:
-        drop = (
+        _report_drops(
             b.filter(F.col("bsz") > max_bucket_size)
             .groupBy("band", "bucket")
-            .agg(F.first("bsz").alias("bsz"))
-            .agg(
-                F.count("*").alias("nb"),
-                F.coalesce(F.sum("bsz"), F.lit(0)).alias("nr"),
-            ).first()
+            .agg(F.first("bsz").alias("bsz")),
+            report,
         )
-        report["dropped_buckets"] = int(drop["nb"])
-        report["dropped_rows"] = int(drop["nr"])
     b = b.filter(F.col("bsz") <= max_bucket_size)
     # Candidate generation is a per-bucket numpy GEMM (guide §4.2: hand the
     # whole bucket to BLAS instead of evaluating ~m²/2 per-pair JVM

@@ -97,6 +97,19 @@ ORDER_SCHEMA = StructType(
     ]
 )
 
+#: auto pin width (``CrawlConfig.pin_partitions`` = 0): enough partitions
+#: that each holds ≤ PIN_ROWS_PER_PARTITION corpus rows, clamped to
+#: [cores, PIN_WIDTH_FACTOR x cores] — a 4x bigger cluster gets up to 4x
+#: the partitions (2-3 task waves per core = straggler slack) while a
+#: small input never pays 3 waves of task overhead. Same-window A/B at
+#: local[32] (BENCH/BASELINE.md round-5 tuning note): at 4M urls width 96
+#: beats width 32 by 1.34x overall / 1.73x on the dominant superstep
+#: (140 -> 80 s — 125k html rows in one partition spill); at 2M urls width
+#: 96 LOSES 0.71x (task overhead), hence a rows/partition target rather
+#: than a blind factor.
+PIN_WIDTH_FACTOR = 3
+PIN_ROWS_PER_PARTITION = 50_000
+
 _norm_udf = F.pandas_udf(normalize_url_series, returnType=StringType())
 
 
@@ -184,18 +197,14 @@ class Crawler:
         # pin / fetch-join width, resolved BEFORE the corpus repartition so
         # the persisted corpus and every superstep's batch repartition agree
         # (exact co-partitioning, no corpus-side exchange). Auto (default)
-        # is data-aware: enough partitions for ≤ pin_rows_per_partition
-        # corpus rows each, clamped to [cores, pin_width_factor x cores] —
-        # see CrawlConfig.pin_partitions for the measured crossover.
+        # is data-aware — see PIN_WIDTH_FACTOR for the measured crossover.
         cores = spark.sparkContext.defaultParallelism
         if cfg.pin_partitions > 0:
             w = cfg.pin_partitions
         elif pages is not None and cfg.fetch_mode != "http":
             n_rows = pages.count()  # metadata-cheap on parquet/range inputs
-            w = min(
-                max(cores, -(-n_rows // max(cfg.pin_rows_per_partition, 1))),
-                int(cfg.pin_width_factor * cores),
-            )
+            w = min(max(cores, -(-n_rows // PIN_ROWS_PER_PARTITION)),
+                    PIN_WIDTH_FACTOR * cores)
         else:
             w = cores
         self._pin_parts = max(w, cfg.seen_partitions, 1)
@@ -470,7 +479,7 @@ class Crawler:
         600-task stages on a 20-row fixture — each task paying fixed
         scheduler + Python-worker overhead). Pinning keeps every state
         DataFrame at ≤ the resolved pin width (CrawlConfig.pin_partitions,
-        auto = pin_width_factor x defaultParallelism); coalesce is
+        auto = data-aware, see PIN_WIDTH_FACTOR); coalesce is
         shuffle-free."""
         return df.coalesce(self._pin_parts).localCheckpoint(eager=True)
 
@@ -1064,15 +1073,7 @@ class Crawler:
                 self._queued_count += (
                     m["requeued"] + m["new_urls"] - m["batch"]
                 )
-                t_ck = time.monotonic()
                 self._checkpoint_state()
-                if "trace" in m:
-                    m["trace"]["checkpoint"] = round(
-                        time.monotonic() - t_ck, 3
-                    )
-                    m["wall_s_with_checkpoint"] = round(
-                        m["wall_s"] + time.monotonic() - t_ck, 3
-                    )
                 # the frontier pin above materialized this superstep's
                 # filter-probe plan — its broadcast can go now (else a
                 # long crawl accumulates one broadcast per superstep)
@@ -1093,7 +1094,6 @@ class Crawler:
 
     def _superstep(self, batch: DataFrame) -> bool:
         t0 = time.monotonic()
-        trace: dict[str, float] = {}
         k = self.superstep
         cfg = self.cfg
         # the filter update depends only on LAST superstep's frontier —
@@ -1153,7 +1153,6 @@ class Crawler:
         ).drop("html")
         self._jd(f"ss{k}:fetch_extract")
         fetched = self._pin(fetched)
-        trace["fetch_extract"] = round(time.monotonic() - t0, 3)
 
         # ---- resources output (meta projection P10; body stays in pages)
         res_url = (
@@ -1426,19 +1425,15 @@ class Crawler:
                     filters = D.merge_filters(
                         filters, self._build_filters(redirect_terminals),
                         cfg.seen_filter)
-                trace["bloom_update"] = round(time.monotonic() - t0, 3)
                 bc = self.spark.sparkContext.broadcast(filters)
                 self._bloom_registry.append(bc)
-            t_aj = time.monotonic()
             self._jd(f"ss{k}:expand_build")
             fresh = D.anti_join_seen(
                 cands, seen, prepared_bc=bc, filter_kind=cfg.seen_filter,
             )
             # anti_join_seen's lazy checkpoint materializes the candidate
             # pipeline's shuffle stages here (AQE executes query stages on
-            # .rdd) — this window is the expansion build, traced apart
-            # from the seq pins below
-            trace["expand_build"] = round(time.monotonic() - t_aj, 3)
+            # .rdd) — the expansion build, labelled apart from the seq pins
             # materialize=False: the ranked output stays lazy — the frontier
             # pin at checkpoint time materializes it, so the sequence
             # assignment costs ONE collect job here instead of collect +
@@ -1465,10 +1460,8 @@ class Crawler:
                 start=self.next_seq,
                 return_count=True,
                 materialize=False,
-                trace=trace,
                 bucket=_bucket,
             )
-            trace["seq_assign"] = round(time.monotonic() - t0, 3)
             new_rows = fresh.select(
                 "url", "host",
                 (F.col("parent_depth") + 1).alias("depth"),
@@ -1498,7 +1491,6 @@ class Crawler:
         # join the concurrently-launched metrics aggregation (the stop-url
         # probe F10 rides it — no separate batch-scan job)
         stat_rows = stat_future.result()
-        trace["metrics"] = round(time.monotonic() - t0, 3)
         counts = {r["status"]: r["n"] for r in stat_rows}
         n_backoff = sum(r["nb"] or 0 for r in stat_rows)
         hit_stop = any(r["stop"] for r in stat_rows)
@@ -1531,8 +1523,6 @@ class Crawler:
             "new_urls": n_new,
             "wall_s": round(time.monotonic() - t0, 3),
         }
-        if os.environ.get("WALK_SPARK_TRACE"):
-            m["trace"] = trace
         self.metrics.append(m)
 
         stop = False
