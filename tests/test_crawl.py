@@ -6,6 +6,8 @@ no-crawl mode (lib/job_test.go:55-88), redirect chains + cap
 (lib/worker_test.go:3-79).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -428,3 +430,43 @@ def test_crawl_order_identical_across_pin_widths(spark):
     wide = run(pin_partitions=48)
     auto = run()  # default: data-aware auto width
     assert narrow == wide == auto
+
+
+def test_fetch_extracts_hits_only(spark):
+    """Extraction runs over the fetch join's hits only: a miss has no body,
+    so its extraction columns are JVM literals equal to
+    parse_page(url, None), and the fetch+extract plan holds one Python
+    pass. The missing seed's resources rows keep their values."""
+    from walk_spark.plans.crawl import Crawler
+    missing = "http://self.test/nopage"
+    cfg = CrawlConfig(seeds=["http://self.test", missing],
+                      domains=["http://self.test"])
+    c = Crawler(spark, self_linking_pages(spark), cfg)
+    c.warm()
+    c._ensure_state()
+    assert not c._seed_norms  # fixed-point seeds: no normalize UDF
+    plan = c._fetch(c._pick_batch(c._queued))._jdf.queryExecution() \
+        .executedPlan().toString()
+    # Python passes outside the cached corpus (its prep ran in warm())
+    evals, cached_at = [], None
+    for ln in plan.splitlines():
+        col = re.search(r"[A-Za-z]", ln).start()
+        if cached_at is not None and col > cached_at:
+            continue
+        cached_at = col if "InMemoryRelation" in ln else None
+        if "ArrowEvalPython" in ln:
+            evals.append(ln)
+    assert len(evals) == 1 and "_extract_batch" in evals[0], plan
+
+    r = c.run()
+    rows = r.resources.filter(F.col("url") == missing).collect()
+    assert len(rows) == 1 + cfg.max_attempts
+    for x in rows:
+        assert (x["status"], x["error"], x["content_type"]) == (
+            0, "fetch error: not found", None)
+        assert (x["title"], x["links"], x["text"], x["hash"]) == ("", [], "", "")
+        assert x["content_sniff"] == "text/plain; charset=utf-8"
+        assert x["content_length"] == 0
+    by_url = {x["url"]: x["status"] for x in r.frontier.collect()}
+    assert by_url[missing] == "failed"
+    assert by_url["http://self.test/a.html"] == "done"

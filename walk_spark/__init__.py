@@ -24,3 +24,8 @@ no per-row Python UDFs in hot paths, no custom Catalyst rules.
 __version__ = "0.1.0"
 
 from walk_spark.config import CrawlConfig  # noqa: F401
+from walk_spark.worker_hook import install_in_worker
+
+# a Spark Python worker imports walk_spark while unpickling an engine UDF:
+# from then on its per-task invalidate_caches stops re-reading zip archives
+install_in_worker()

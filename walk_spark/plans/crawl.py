@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from walk_spark.config import CrawlConfig
-from walk_spark.functions.extract import with_extraction
+from walk_spark.functions.extract import no_body_extraction, with_extraction
 from walk_spark.functions.urlnorm import (
     canonical_host, normalize_url, normalize_url_series,
 )
@@ -697,13 +697,15 @@ class Crawler:
     def _fetch(self, batch: DataFrame) -> DataFrame:
         """Simulated GET (J4): resolve redirect terminals via the
         precomputed chains table, then a single content join on the final
-        url. One row per batch url; recorded hop rows in self._hop_rows.
+        url, then extraction. One row per batch url; recorded hop rows in
+        self._hop_rows.
         With ``fetch_mode='http'`` this dispatches to live GETs instead —
         same output columns, same downstream superstep."""
         if self.cfg.fetch_mode == "http":
             # live GETs produce rows host-grouped by the politeness pick —
             # spread them before extraction (no corpus to co-partition with)
-            return self._fetch_http(batch).repartition(self._pin_parts)
+            return _extract_fetched(
+                self._fetch_http(batch).repartition(self._pin_parts))
         # depth > 0 rows entered the frontier as extraction output, i.e.
         # already through resolve_and_normalize — and normalization is
         # idempotent (tests/test_urlnorm_properties.py::test_idempotent),
@@ -810,9 +812,9 @@ class Crawler:
         # url+ints rows), bounded per partition at any corpus scale.
         # Misses are recovered with a batch-sized anti-join.
         pages = self.pages.drop("p_redir_norm")
-        hits = b.hint("shuffle_hash").join(
+        hits = _extract_fetched(b.hint("shuffle_hash").join(
             pages, b.final_url_norm == pages.p_url_norm, "inner"
-        )
+        ))
         misses = b.join(
             pages.select("p_url_norm"),
             b.final_url_norm == pages.p_url_norm,
@@ -822,7 +824,10 @@ class Crawler:
             misses = misses.withColumn(
                 f.name, F.lit(None).cast(f.dataType)
             )
-        return hits.unionByName(misses)
+        # a miss has no body, so its extraction is a constant row: JVM
+        # literals, not a Python pass of its own (which ran _pin_parts
+        # Python tasks per superstep, nearly all over no rows)
+        return hits.unionByName(misses.select("*", *no_body_extraction()))
 
     def _candidate_filter_expr(self, authority=None, path=None):
         """P7 (lib/job.go:250-271): reject ignore-pattern substrings; accept
@@ -1110,26 +1115,13 @@ class Crawler:
         # reused across the hits/misses branches (ReusedExchange). One fewer
         # eager job per superstep — fixed cost that never shrank with cores.
 
-        # extraction is the CPU-dominant stage: _fetch guarantees its
-        # output is already _pin_parts wide (batch repartitioned onto the
+        # extraction is the CPU-dominant stage: _fetch runs it over input
+        # that is already _pin_parts wide (batch repartitioned onto the
         # corpus partitioning before the join — no html re-shuffle; AQE
         # would otherwise coalesce html-sized rows onto a handful of tasks:
         # measured scaling efficiency 0.25 with 70k-page extractions on 2
         # tasks)
         fetched = self._fetch(batch)
-        # extraction — one Arrow pass over the joined html column. Relative
-        # hrefs resolve against the page's OWN url (p_url): the simulated
-        # server serves norm-equivalent url forms for the same content, like
-        # a real server 301-ing to the canonical location, and the reference
-        # resolves against the final post-redirect request url
-        # (lib/worker.go:141-151).
-        fetched = with_extraction(
-            fetched.withColumnRenamed("p_html", "html").withColumn(
-                "_base", F.coalesce(F.col("p_url"), F.col("final_url_norm"))
-            ),
-            url_col="_base",
-            html_col="html",
-        )
         fetched = fetched.withColumn(
             "_err",
             F.coalesce(
@@ -1149,8 +1141,8 @@ class Crawler:
         # re-reads stop being memory-bandwidth-bound.
         fetched = fetched.withColumn(
             "content_length",
-            F.coalesce(F.length("html").cast("long"), F.lit(0).cast("long")),
-        ).drop("html")
+            F.coalesce(F.length("p_html").cast("long"), F.lit(0).cast("long")),
+        ).drop("p_html")
         self._jd(f"ss{k}:fetch_extract")
         fetched = self._pin(fetched)
 
@@ -1683,6 +1675,21 @@ class Crawler:
                     spark.read.schema(ORDER_SCHEMA).parquet(op)
                 )
         return c
+
+
+def _extract_fetched(fetched: DataFrame) -> DataFrame:
+    """One Arrow extraction pass over fetched rows' ``p_html``. Relative
+    hrefs resolve against the page's OWN url (p_url): the simulated server
+    serves norm-equivalent url forms for the same content, like a real
+    server 301-ing to the canonical location, and the reference resolves
+    against the final post-redirect request url (lib/worker.go:141-151)."""
+    return with_extraction(
+        fetched.withColumn(
+            "_base", F.coalesce(F.col("p_url"), F.col("final_url_norm"))
+        ),
+        url_col="_base",
+        html_col="p_html",
+    ).drop("_base")
 
 
 def _read_manifest(path: str) -> list[dict]:
