@@ -312,3 +312,136 @@ def test_sketch_signatures_golden_across_segments(spark):
           DT.simhash_signatures(df).orderBy("doc_id").collect()]
     assert digest(sh) == (
         "3cd898e54f3fbc5e3e773c30e29470483331cd698a589449d42562b520544dbf")
+
+
+def _families(spark):
+    """12 families of five 20-word docs (a base and variants with 1-4
+    words changed, so pairwise SimHash distances spread over 2-8 bits),
+    then 60 unrelated docs."""
+    import random
+
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = []
+    for _ in range(12):
+        base = [rng.choice(vocab) for _ in range(20)]
+        for v in range(5):
+            w = list(base)
+            for p in rng.sample(range(20), v):
+                w[p] = rng.choice(vocab)
+            rows.append((len(rows), " ".join(w)))
+    for _ in range(60):
+        rows.append((len(rows), " ".join(rng.choice(vocab) for _ in range(20))))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_simhash_capped_keeps_pairs_of_kept_buckets(spark):
+    """A pair whose bucket is over the cap in one band is still reported
+    from a band whose bucket is kept; only (5, 8), whose every shared
+    bucket holds more than 3 docs, is lost. Pairs and report computed
+    with the earlier explode-dedup-orderBy plan."""
+    report: dict = {}
+    got = [tuple(r) for r in DT.simhash_pairs(
+        _families(spark), max_hamming=8, max_bucket_size=3,
+        report=report).collect()]
+    assert got == [
+        (0, 1, 8), (5, 6, 2), (5, 7, 7), (6, 7, 7), (6, 8, 8), (10, 11, 6),
+        (15, 16, 2), (15, 18, 7), (16, 18, 7), (20, 21, 3), (20, 22, 7),
+        (20, 24, 6), (25, 26, 7), (27, 28, 8), (30, 31, 2), (30, 32, 5),
+        (30, 33, 6), (31, 32, 5), (31, 33, 8), (32, 33, 7), (35, 36, 7),
+        (40, 42, 4), (45, 47, 6), (46, 47, 6), (50, 51, 6), (50, 52, 6),
+        (50, 53, 7), (50, 54, 8), (55, 56, 7),
+    ]
+    assert report == {"dropped_buckets": 17, "dropped_rows": 70}
+
+
+def _pair_job_inputs(spark):
+    """210 docs (200 random, then exact copies of the first 10) and 160
+    float32 dim-16 vectors (150 random, then copies of the first 10),
+    each pinned with one partition per core so no job adds a spread
+    exchange."""
+    import random
+
+    import numpy as np
+
+    n = spark.sparkContext.defaultParallelism
+    rng = random.Random(9)
+    texts = [" ".join(f"t{rng.randrange(500)}" for _ in range(30))
+             for _ in range(200)]
+    docs = spark.createDataFrame(
+        list(enumerate(texts + texts[:10])), "doc_id long, text string")
+    V = np.random.RandomState(9).normal(size=(150, 16)).astype(np.float32)
+    V = np.vstack([V, V[:10]])
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)],
+        "vec_id long, embedding array<float>")
+    return (docs.repartition(n).localCheckpoint(),
+            vecs.repartition(n).localCheckpoint())
+
+
+def _pair_jobs(docs, vecs):
+    from walk_spark.operators import similarity as SIM
+    return {
+        "minhash": DT.minhash_lsh_pairs(docs, threshold=0.8),
+        "simhash": DT.simhash_pairs(docs, max_hamming=3),
+        "embdup": SIM.embedding_dup_pairs(vecs, threshold=0.99, dim=16),
+    }
+
+
+def test_pair_jobs_plan_two_exchanges(spark):
+    """Each pair job's plan above its input (or the signature pin) has
+    exactly two exchanges, the bucket build and the output ordering's
+    range exchange, which also removes the cross-band repeats; no pandas
+    group call, no join-back, and at most one signature UDF evaluation."""
+    import re
+
+    for name, df in _pair_jobs(*_pair_job_inputs(spark)).items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange\b", plan)) == 2, (name, plan)
+        assert "rangepartitioning(id_a" in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        assert not re.search(r"Join\b", plan), (name, plan)
+        assert plan.count("ArrowEvalPython") <= 1, (name, plan)
+
+
+def test_warm_pair_job_set_compiles_nothing(spark):
+    """The three pair jobs' generated classes fit Spark's default codegen
+    cache: a second, identical job set compiles no class."""
+    docs, vecs = _pair_job_inputs(spark)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    first = {n: df.collect() for n, df in _pair_jobs(docs, vecs).items()}
+    assert all(first.values()), first
+    before = compiles.getCount()
+    again = {n: df.collect() for n, df in _pair_jobs(docs, vecs).items()}
+    assert compiles.getCount() - before == 0
+    assert again == first
+
+
+def test_scored_pairs_blocks_stay_within_budget():
+    """_scored_pairs under a small budget: the pairs of buckets of many
+    sizes, one far over the budget, come out in several blocks, none over
+    budget // width pairs, and together they are exactly the brute-force
+    pairs inside each bucket."""
+    import numpy as np
+
+    rng = np.random.RandomState(4)
+    sizes = [2, 3, 3, 7, 40, 5, 2, 90]
+    offs = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64)
+    X = rng.randint(0, 3, size=(offs[-1], 4)).astype(np.int64)
+    budget = 1024
+
+    def score(A, B):
+        return np.count_nonzero(A[:, :, None] == B[:, None], axis=3)
+
+    blocks = list(DT._scored_pairs(X, offs, score, lambda s: s >= 2, budget))
+    assert len(blocks) > 10
+    assert max(len(i) for i, _, _ in blocks) <= budget // X.shape[1]
+    got = sorted((int(a), int(b), int(s)) for i, j, v in blocks
+                 for a, b, s in zip(i, j, v))
+    want = sorted(
+        (a, b, int(np.count_nonzero(X[a] == X[b])))
+        for lo, hi in zip(offs[:-1], offs[1:])
+        for a in range(lo, hi) for b in range(a + 1, hi)
+        if np.count_nonzero(X[a] == X[b]) >= 2)
+    assert got == want

@@ -135,3 +135,74 @@ def test_lsh_index_persisted_path_prunes_partitions(spark, tmp_path):
     # mismatched query dim is rejected
     with pytest.raises(ValueError, match="dim"):
         SIM.ann_topk_lsh(None, [0.0] * 8, index_path=path, spark=spark)
+
+
+def _jvm_fold_pairs(df, threshold):
+    """{(id_a, id_b): round(cosine, 4)} of every pair at or above
+    ``threshold``, by the brute-force JVM fold (products in the element
+    type, summed in double in dimension order) over a self-join."""
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
+    dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    cos = F.round(dot / (SIM._norm(F.col("v_a")) * SIM._norm(F.col("v_b"))), 4)
+    return {(r["id_a"], r["id_b"]): r["cosine"] for r in
+            a.join(b, F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", cos.alias("cosine"))
+            .filter(F.col("cosine") >= threshold).collect()}
+
+
+@pytest.mark.parametrize("dtype", ["float", "double"])
+def test_embedding_dup_cosine_equals_jvm_fold(spark, dtype):
+    """Every cosine embedding_dup_pairs reports equals the brute-force
+    JVM fold over a self-join, for float and double vectors; at
+    threshold 0.3 hundreds of varied values are compared."""
+    rng = np.random.RandomState(5)
+    V = rng.normal(size=(160, 16))
+    if dtype == "float":
+        V = V.astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(len(V))],
+        f"vec_id long, embedding array<{dtype}>")
+    got = {(r["id_a"], r["id_b"]): r["cosine"] for r in
+           SIM.embedding_dup_pairs(df, threshold=0.3, dim=16, bits=2,
+                                   bands=8).collect()}
+    brute = _jvm_fold_pairs(df, 0.3)
+    assert len(got) >= 300
+    assert set(got) <= set(brute)
+    assert len(set(got.values())) >= 200
+    assert all(got[p] == brute[p] for p in got)
+
+
+def test_embedding_dup_blocked_verify_matches_jvm_fold(spark, monkeypatch):
+    """A bucket of 60 identical vectors among 100 random ones, verified
+    under a 2,048-element pair budget: the big buckets are scored a few
+    rows at a time and folded in blocks of at most 128 pairs. The output
+    equals the one-block output at the default budget, and every cosine
+    equals the JVM fold."""
+    from walk_spark.operators import dedup_text as DT
+
+    V = _vecs(100, 16, seed=11)
+    V = np.vstack([V, np.repeat(V[:1], 60, axis=0)])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(len(V))],
+        "vec_id long, embedding array<float>")
+
+    def run():
+        report: dict = {}
+        rows = SIM.embedding_dup_pairs(df, threshold=0.3, dim=16, bits=2,
+                                       bands=8, max_bucket_size=200,
+                                       report=report).collect()
+        assert report == {"dropped_buckets": 0, "dropped_rows": 0}
+        return rows
+
+    whole = run()
+    monkeypatch.setattr(DT, "_PAIR_BUDGET", 2048)
+    blocked = run()
+    assert blocked == whole
+    got = {(r["id_a"], r["id_b"]): r["cosine"] for r in blocked}
+    brute = _jvm_fold_pairs(df, 0.3)
+    copies = [0] + list(range(100, 160))
+    assert all((a, b) in got for a in copies for b in copies if a < b)
+    assert set(got) <= set(brute)
+    assert all(got[p] == brute[p] for p in got)

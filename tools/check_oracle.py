@@ -7,12 +7,15 @@ new queries: every line must print OK (or ROWS-ONLY for oracle-less ops).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so a second checkout checks itself
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tests.conftest import make_spark  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402

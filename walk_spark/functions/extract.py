@@ -222,28 +222,25 @@ def parse_page(url: str, body: bytes | None) -> tuple[str, list[str], str, str, 
         return "", [], "", sniff, chash
     html = bytes(body).decode("utf-8", errors="replace")
     scanned = _scan_page(html)
-    if scanned is not None:
-        class _S:  # duck-typed result holder, same attrs as _PageParser
-            pass
-        p = _S()
-        p.hrefs, p.title_parts, p.text_parts = scanned
-    else:
+    if scanned is None:
         p = _PageParser()
         try:
             p.feed(html)
             p.close()
         except Exception:
             pass
+        scanned = p.hrefs, p.title_parts, p.text_parts
+    hrefs, title_parts, text_parts = scanned
     # resolve + normalize + first-seen-order dedup (lib/resource.go:171-184)
     links: list[str] = []
     seen: set[str] = set()
-    for href in p.hrefs:
+    for href in hrefs:
         n = resolve_and_normalize(url or "", href)
         if n and n not in seen:
             seen.add(n)
             links.append(n)
-    title = "".join(p.title_parts).strip()
-    text = " ".join(p.text_parts)
+    title = "".join(title_parts).strip()
+    text = " ".join(text_parts)
     return title, links, text, sniff, chash
 
 

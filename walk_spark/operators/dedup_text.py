@@ -9,14 +9,29 @@ Four escalating strategies, each returning DataFrames (never driver-side):
   for the sketch methods and SQL-verifiable in DuckDB.
 - minhash_lsh_pairs     — MinHash signatures (numpy, one Arrow UDF pass) +
   banded LSH bucketing: candidates only ever meet inside a band bucket, so
-  the join is linear in corpus size; bucket-join → estimate → threshold.
+  the work is linear in corpus size.
 - simhash_pairs         — 64-bit SimHash + pigeonhole band blocking for
   hamming-distance ≤ k pairs.
 
-Scale notes: all joins are equi-joins on hash keys (AQE-skew-splittable);
+The near-duplicate pair jobs (the two above and
+``similarity.embedding_dup_pairs``) share one shape, with two exchanges:
+
+1. bucket — each (band, key) bucket collects its members with their
+   payload (signature, simhash or vector) over one exchange, capped at
+   ``max_bucket_size`` (``_bounded_buckets``);
+2. verify — buckets with two or more members go to one ``mapInArrow``
+   numpy kernel that verifies many buckets per Arrow batch and emits only
+   the verified pairs, a bounded block at a time (``_bucket_pairs``,
+   ``_scored_pairs``);
+3. threshold — a JVM projection applies the exact ``round(·, 4)`` and
+   threshold;
+4. range-dedup — the output ordering's range exchange also removes the
+   pairs found in several bands (``_range_dedup``).
+
+Scale notes: the bucket exchange is on hash keys (AQE-skew-splittable);
 signatures are fixed-width arrays (no text shuffled after the UDF pass);
-band buckets with pathological sizes (boilerplate pages) should be capped
-with a per-bucket limit before pairing — exposed as ``max_bucket_size``.
+band buckets with pathological sizes (boilerplate pages) are dropped, and
+counted on request, above ``max_bucket_size``.
 """
 
 from __future__ import annotations
@@ -221,32 +236,33 @@ def _report_drops(over: DataFrame, report: dict) -> None:
     report["dropped_rows"] = int(drop["nr"])
 
 
-def _bounded_buckets(banded: DataFrame, keys: list[str], member: Column,
-                     max_bucket_size: int,
+def _bounded_buckets(banded: DataFrame, keys: list[str], id_col: str,
+                     payload: str, max_bucket_size: int,
                      report: dict | None) -> DataFrame:
     """(keys..., bsz, members) for the band buckets of ``banded`` that
-    hold at most ``max_bucket_size`` rows; ``members`` collects ``member``
-    in ``doc_id`` order.
+    hold at most ``max_bucket_size`` rows; ``members`` collects
+    ``(id_col, payload)`` structs.
 
     ONE exchange builds the buckets: the row_number window and the
     conditional collect_list (buffer bounded at the cap — same pattern as
-    exact_duplicates) share the key hash partitioning, so callers explode
-    the within-bucket pairs in-stage. An older shape paid a bucket-size
-    aggregate exchange, a cap join (sort-merge over mostly-singleton
-    buckets — measured 2.9 s of the 5.8 s at sf1.0) and a self-join.
+    exact_duplicates) share the key hash partitioning. An older shape paid
+    a bucket-size aggregate exchange, a cap join (sort-merge over
+    mostly-singleton buckets — measured 2.9 s of the 5.8 s at sf1.0) and a
+    self-join.
 
     No silent caps: larger buckets (boilerplate pages — quadratic inside
     the bucket) are dropped, and a ``report`` dict receives the drop counts
     (one extra aggregation job over the pinned buckets)."""
     from pyspark.sql import Window
-    w = Window.partitionBy(*keys).orderBy("doc_id")
+    w = Window.partitionBy(*keys).orderBy(id_col)
     grouped = (
         banded.withColumn("_rn", F.row_number().over(w))
         .groupBy(*keys)
         .agg(
             F.count("*").alias("bsz"),
             F.collect_list(
-                F.when(F.col("_rn") <= max_bucket_size, member)
+                F.when(F.col("_rn") <= max_bucket_size,
+                       F.struct(id_col, payload))
             ).alias("members"),
         )
     )
@@ -254,6 +270,128 @@ def _bounded_buckets(banded: DataFrame, keys: list[str], member: Column,
         grouped = grouped.localCheckpoint(eager=False)
         _report_drops(grouped.filter(F.col("bsz") > max_bucket_size), report)
     return grouped.filter(F.col("bsz") <= max_bucket_size)
+
+
+#: elements of one pairwise temporary in the verify kernels (~4 M)
+_PAIR_BUDGET = 1 << 22
+
+
+def _scored_pairs(X: np.ndarray, offs: np.ndarray, score, hit,
+                  budget: int):
+    """Yield blocks (i, j, s) over the rows of ``X``, which hold the
+    members of consecutive buckets (bucket b is rows ``offs[b]:offs[b+1]``):
+    every pair i < j inside one bucket whose pairwise score ``s`` passes
+    ``hit(s)``, each pair in one block.
+
+    ``score(A, B)`` maps row blocks A (nb, R, ...) and B (nb, C, ...) to
+    (nb, R, C) scores. Buckets of one size are stacked so that thousands
+    of small buckets cost a few numpy calls; a bucket too large for the
+    budget is scored in blocks of rows. Each row is scored only against
+    the rows after it. Every temporary stays within ``budget`` elements,
+    and a block holds at most ``budget // width`` pairs (``width`` =
+    elements per row), so a caller that builds per-pair rows of ``X``'s
+    width stays within the budget too; the exception is one bucket whose
+    rows exceed the budget, where the bounds are that bucket's size."""
+    sizes = np.diff(offs)
+    width = int(np.prod(X.shape[1:], dtype=np.int64))
+    for m in np.unique(sizes).tolist():
+        starts = offs[:-1][sizes == m]
+        cells = m * m * width
+        if cells <= budget:
+            nb, rows = budget // cells, m - 1
+        else:
+            nb, rows = 1, max(1, budget // (m * width))
+        for b0 in range(0, len(starts), nb):
+            st = starts[b0:b0 + nb]
+            Xb = X[st[:, None] + np.arange(m)]
+            for r0 in range(0, m - 1, rows):
+                s = score(Xb[:, r0:r0 + rows], Xb[:, r0 + 1:])
+                # local column c is row r0 + 1 + c: keep it after row r0 + r
+                b, r, c = np.nonzero(np.triu(hit(s)))
+                if len(b):
+                    yield st[b] + r0 + r, st[b] + r0 + 1 + c, s[b, r, c]
+
+
+def _rows(arr) -> np.ndarray:
+    """An Arrow list array of equal-length lists as an (n, width) array."""
+    vals = arr.flatten().to_numpy(zero_copy_only=False)
+    return vals.reshape(len(arr), -1)
+
+
+def _bucket_pairs(banded: DataFrame, keys: list[str], id_col: str,
+                  payload: str, kernel, value_type: str,
+                  max_bucket_size: int, report: dict | None) -> DataFrame:
+    """(id_a < id_b, v): the verified pairs of every bounded band bucket
+    of ``banded`` (see ``_bounded_buckets``), once per bucket that holds
+    both members — ``_range_dedup`` removes the cross-band repeats.
+
+    Buckets with two or more members go to ONE ``mapInArrow`` kernel that
+    verifies many buckets per Arrow batch: ``kernel(payload, offs,
+    budget)`` gets the batch's flattened member payloads (an Arrow array)
+    and the bucket offsets, and yields blocks of member positions (i, j)
+    and pair values ``v`` (a numpy array of the Spark type
+    ``value_type``), passing ``budget`` on to ``_scored_pairs``. Each block becomes one output Arrow batch, so the
+    output, like the kernel's temporaries, is bounded by ``_PAIR_BUDGET``
+    rather than by the pair count of a whole batch.
+
+    Measured and rejected (do not re-try without a new measurement):
+    - emitting a pair only from the first band in which both members
+      collide, which would remove the cross-band dedup: it is inexact. A
+      pair whose first colliding bucket is over the cap and dropped, while
+      a later band's bucket is kept, would be lost; this shape reports it.
+    - exploding the pairs of each bucket into JVM rows carrying both
+      signatures, and verifying with a JVM expression: it took the
+      duplicate-heavy ``minhash_lsh_dedup`` oracle from 28 s (exploding
+      ids, then joining the signatures back) to 94 s on a 4-vCPU box.
+    """
+    import pyarrow as pa
+
+    id_type = banded.schema[id_col].dataType.simpleString()
+    budget = _PAIR_BUDGET  # read here, so the closure carries it to workers
+
+    def verify(batches):
+        for rb in batches:
+            members = rb.column(0)
+            offs = members.offsets.to_numpy().astype(np.int64)
+            ids, pay = members.flatten().flatten()
+            ids = ids.to_numpy(zero_copy_only=False)
+            for i, j, v in kernel(pay, offs - offs[0], budget):
+                a, b = ids[i], ids[j]
+                keep = a != b  # an id listed twice is no pair (id_a < id_b)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.minimum(a, b)[keep]),
+                     pa.array(np.maximum(a, b)[keep]), pa.array(v[keep])],
+                    names=["id_a", "id_b", "v"],
+                )
+
+    return (
+        _bounded_buckets(banded, keys, id_col, payload, max_bucket_size,
+                         report)
+        .filter(F.col("bsz") >= 2)
+        .select("members")
+        .mapInArrow(verify, f"id_a {id_type}, id_b {id_type}, "
+                            f"v {value_type}")
+    )
+
+
+def _range_dedup(pairs: DataFrame) -> DataFrame:
+    """``pairs`` without repeated (id_a, id_b), ordered by them. The
+    range exchange of the output ordering also serves the dedup: range
+    partitioning on (id_a, id_b) satisfies the dedup's clustering, so no
+    hash exchange is added, and sorting each partition completes the
+    order (the same rows and order as ``dropDuplicates().orderBy()``).
+
+    The range exchange's sampling job re-runs its whole input stage, the
+    verify kernel included. Measured and not taken: ``dropDuplicates``
+    then ``orderBy`` moves the kernel out of that stage (MinHash 5.6 →
+    4.3 CPU-s per job at 5,000 docs on a 4-vCPU box), but its extra
+    aggregate classes overflow Spark's default codegen cache: the second
+    of two identical job sets recompiled 16 classes."""
+    return (
+        pairs.repartitionByRange("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+        .sortWithinPartitions("id_a", "id_b")
+    )
 
 
 def _no_silent_drop(op: str, max_bucket_size: int, report: dict | None,
@@ -383,11 +521,14 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 128,
                       max_bucket_size: int = 5000,
                       seed: int = 42,
                       report: dict | None = None) -> DataFrame:
-    """Near-duplicate candidate pairs with estimated jaccard ≥ threshold.
+    """Near-duplicate candidate pairs (id_a, id_b, est_jaccard) with
+    estimated jaccard ≥ threshold, ordered by (id_a, id_b).
 
-    sig -> split into ``bands`` bands of k/bands rows -> hash each band ->
-    explode to (band, bucket) keys -> pair within buckets -> estimate
-    jaccard as matching-minhash fraction -> threshold.
+    The pair-job shape (module docstring) over ``(doc_id, sig)`` members
+    of the ``bands`` band buckets: the kernel keeps pairs with ``eq ≥
+    (threshold − 1e-4)·k`` equal signature positions, the JVM applies
+    ``round(eq / k, 4) ≥ threshold`` (4-digit HALF_UP rounding raises a
+    value by less than 5e-5, so the margin loses no pair).
 
     Buckets larger than ``max_bucket_size`` are dropped; pass ``report={}``
     for ``dropped_buckets``/``dropped_rows`` (see ``_bounded_buckets``).
@@ -396,45 +537,36 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 128,
     sigs = minhash_signatures(docs, k=k, shingle_n=shingle_n,
                               id_col=id_col, text_col=text_col, seed=seed,
                               bands=bands)
-    # the signature pass is the expensive Python stage and is consumed
-    # twice (band keys + the estimate attach below): pin it so the UDF runs
-    # exactly once regardless of plan shape
+    # pin the signature pass: the optimizer infers a non-empty filter on
+    # the exploded ``bands`` column and pushes it below the projection,
+    # into a second evaluation of the signature UDF
     sigs = sigs.localCheckpoint(eager=False)
-    # band keys only — the k-long signature array (~1 KB/row) stays OUT of
-    # the banded explode and the bucket shuffle (guide §2.3 "project before
-    # the exchange"); signatures are re-attached to the few surviving
-    # candidate pairs instead of riding every bucket row. Equal band slices
-    # collide under any consistent hash, so the precomputed keys give the
-    # same candidates as a JVM hash (see _band_hash_u64).
     banded = sigs.select(
-        "doc_id",
+        "doc_id", "sig",
         F.posexplode(F.col("bands")).alias("band", "bucket"),
     )
-    cand = (
-        _bounded_buckets(banded, ["band", "bucket"], F.col("doc_id"),
-                         max_bucket_size, report)
-        .select(F.explode("members").alias("id_a"), F.col("members"))
-        .select("id_a", F.explode("members").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.round(
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        / F.lit(k),
-        4,
-    )
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+    min_eq = (threshold - 1e-4) * k
+
+    def equal_positions(pay, offs, budget):
+        for i, j, eq in _scored_pairs(
+            _rows(pay), offs,
+            lambda A, B: np.count_nonzero(A[:, :, None] == B[:, None],
+                                          axis=3),
+            lambda eq: eq >= min_eq, budget,
+        ):
+            yield i, j, eq.astype(np.int32)
+
+    # Measured and not taken: buckets of ids with the signatures joined
+    # back to the kept buckets' members. At 5,000 docs it cut the bucket
+    # shuffle from 49.5 to 3.6 MB and the job from 4.5 to 3.6 CPU-s, but
+    # with it a warm job set recompiled 12 MinHash classes (default
+    # codegen cache; 0 with the signature on every band row).
+    pairs = _bucket_pairs(banded, ["band", "bucket"], "doc_id", "sig",
+                          equal_positions, "int", max_bucket_size, report)
+    est = F.round(F.col("v") / F.lit(k), 4).alias("est_jaccard")
+    return _range_dedup(
+        pairs.select("id_a", "id_b", est)
         .filter(F.col("est_jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -547,47 +679,50 @@ def _simhash_block_keys(col: Column, max_hamming: int) -> list[Column]:
     ]
 
 
+def _popcount(x: np.ndarray) -> np.ndarray:
+    """Set bits of each 64-bit value (SWAR popcount)."""
+    x = x.view(np.uint64)
+    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    x = ((x & np.uint64(0x3333333333333333))
+         + ((x >> np.uint64(2)) & np.uint64(0x3333333333333333)))
+    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
+
+
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                   id_col: str = "doc_id", text_col: str = "text",
                   max_bucket_size: int = 5000,
                   report: dict | None = None) -> DataFrame:
-    """Pairs with hamming(simhash) ≤ max_hamming via pigeonhole blocking
+    """Pairs (id_a, id_b, hamming) with hamming(simhash) ≤ max_hamming,
+    ordered by (id_a, id_b), via pigeonhole blocking
     (``_simhash_block_keys``: 2-block combination keys — complete for any
     ``max_hamming``, with ~2×-wider band keys than the classic 1-block
-    split so random bucket collisions stay tiny). Pairs explode inside
-    each bucket and are verified with bit_count BEFORE the pair-dedup
-    exchange, so only true near-pairs are ever shuffled (hamming is a pure
-    function of the two signatures, so filter-then-dedup ≡
-    dedup-then-filter).
+    split so random bucket collisions stay tiny). The pair-job shape
+    (module docstring) over ``(doc_id, simhash)`` members: the kernel
+    keeps pairs whose XOR has at most ``max_hamming`` set bits.
 
     Band buckets larger than ``max_bucket_size`` are dropped; pass
     ``report={}`` to receive ``dropped_buckets``/``dropped_rows``."""
     sigs = simhash_signatures(docs, id_col=id_col, text_col=text_col)
-    # 16 bytes/row: pin it so the signature UDF runs once whatever the
-    # plan shape
-    sigs = sigs.localCheckpoint(eager=False)
     banded = sigs.select(
         "doc_id", "simhash",
         F.posexplode(
             F.array(*_simhash_block_keys(F.col("simhash"), max_hamming))
         ).alias("band", "key"),
     )
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        _bounded_buckets(banded, ["band", "key"],
-                         F.struct("doc_id", "simhash"), max_bucket_size,
-                         report)
-        .select(F.explode("members").alias("a"), F.col("members"))
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .orderBy("id_a", "id_b")
+
+    def near(pay, offs, budget):
+        for i, j, ham in _scored_pairs(
+            pay.to_numpy(zero_copy_only=False), offs,
+            lambda A, B: _popcount(A[:, :, None] ^ B[:, None]),
+            lambda ham: ham <= max_hamming, budget,
+        ):
+            yield i, j, ham.astype(np.int32)
+
+    pairs = _bucket_pairs(banded, ["band", "key"], "doc_id", "simhash",
+                          near, "int", max_bucket_size, report)
+    return _range_dedup(
+        pairs.select("id_a", "id_b", F.col("v").alias("hamming"))
     )
 
 

@@ -9,8 +9,10 @@
   each query touches ~corpus/2^bits rows.
 - ``ann_topk_lsh``     — bucketed ANN: probe the query's bucket (plus
   optional multi-probe neighbors), brute-force only inside.
-- ``embedding_dup_pairs`` — near-duplicate pairs by cosine ≥ threshold,
-  LSH-bucketed self-join (the embedding-space analog of MinHash dedup).
+- ``embedding_dup_pairs`` — near-duplicate pairs by cosine ≥ threshold:
+  LSH band buckets, a batched numpy verify inside buckets, the output
+  sort's range exchange as the cross-band dedup (the embedding-space
+  analog of MinHash dedup).
 """
 
 from __future__ import annotations
@@ -22,7 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from walk_spark.operators.dedup_text import _report_drops, _spread
+from walk_spark.operators.dedup_text import (
+    _bucket_pairs, _range_dedup, _rows, _scored_pairs, _spread,
+)
 
 
 def _dot_with_lit(vec_col, qvec: list[float]):
@@ -247,84 +251,51 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
                         max_bucket_size: int = 5000,
                         seed: int = 42,
                         report: dict | None = None) -> DataFrame:
-    """Near-duplicate pairs by cosine ≥ threshold: banded LSH self-join,
-    exact cosine verify inside buckets only.
+    """Near-duplicate pairs (id_a, id_b, cosine) with cosine ≥ threshold,
+    ordered by (id_a, id_b): the pair-job shape of ``dedup_text`` over
+    ``(vec_id, embedding)`` members of the ``rp_lsh_banded`` buckets; the
+    kernel computes the exact cosine, the JVM applies ``round(cosine, 4)
+    ≥ threshold``.
 
     Banding bounds both miss rate and bucket size: with p = 1 - θ/π per bit,
     P(miss) = (1 - p^bits)^bands — at cosine 0.95 and the 4×8 default,
     ~2·10⁻⁴; identical vectors collide with probability 1. Buckets larger
     than ``max_bucket_size`` are dropped (pass ``report={}`` for
     ``dropped_buckets``/``dropped_rows`` — the no-silent-caps contract)."""
-    from pyspark.sql import Window
-
     b = rp_lsh_banded(embeddings, dim, bits, bands, id_col, vec_col, seed)
-    # the size gate and the GEMM stage both consume the banded table — pin
-    # it so the projection UDF runs once
-    b = b.localCheckpoint(eager=False)
-    # bucket-size gate via a window COUNT sharing the (band, bucket) hash
-    # partitioning of the GEMM groupBy below — one exchange total instead
-    # of a size aggregate + cap join (guide §2.4); oversized buckets are
-    # still dropped BEFORE any bucket is collected into a pandas group, so
-    # worker memory stays bounded by max_bucket_size at any scale
-    wsz = Window.partitionBy("band", "bucket")
-    b = b.withColumn("bsz", F.count("*").over(wsz))
-    if report is not None:
-        _report_drops(
-            b.filter(F.col("bsz") > max_bucket_size)
-            .groupBy("band", "bucket")
-            .agg(F.first("bsz").alias("bsz")),
-            report,
-        )
-    b = b.filter(F.col("bsz") <= max_bucket_size)
-    # Candidate generation is a per-bucket numpy GEMM (guide §4.2: hand the
-    # whole bucket to BLAS instead of evaluating ~m²/2 per-pair JVM
-    # expressions): normalize the bucket matrix once, one (m, m) matmul,
-    # emit only the index pairs above ``threshold - margin``. The margin
-    # (2e-4) strictly covers both the float64-GEMM vs JVM-float32-fold
-    # summation divergence (<1e-5) and the half-ulp of the final
-    # round(·, 4), so no pair the exact verify would accept can be lost.
-    # The old plan shipped every candidate pair — with BOTH embedding
-    # payloads — through the dropDuplicates exchange and evaluated an
-    # interpreted higher-order cosine per pair.
-    margin = 2e-4
-    tpre = threshold - margin
+    # Candidates come from a float64 GEMM over each bucket's normalized
+    # rows (guide §4.2: hand the bucket to BLAS), kept at ``threshold -
+    # margin``. The margin (2e-4) covers the GEMM vs exact-fold summation
+    # divergence (<1e-5) and the half-ulp of the final round(·, 4), so no
+    # pair the exact verify accepts is lost. A zero vector has no cosine
+    # (the JVM fold divides by its zero norm): it is never reported.
+    tpre = threshold - 2e-4
 
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack([
-            np.asarray(v, dtype=np.float64) for v in pdf["embedding"]
-        ])
+    def cosine(pay, offs, budget):
+        V = _rows(pay)  # the input dtype: float32 or float64
+        M = V.astype(np.float64)
         nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0] = 1.0  # zero vectors: cos 0 here, NaN in the verify —
-        # dropped by both paths, so parity holds
-        Mn = M / nrm[:, None]
-        C = Mn @ Mn.T
-        ia, ib = np.nonzero(np.triu(C >= tpre, k=1))
-        lo = np.minimum(ids[ia], ids[ib])
-        hi = np.maximum(ids[ia], ids[ib])
-        return pd.DataFrame({"id_a": lo, "id_b": hi})
+        nrm[nrm == 0] = 1.0
+        M /= nrm[:, None]
+        # the exact value is the JVM fold of the brute-force path,
+        # aggregate(zip_with(a, b, a * b), 0.0, acc + x): products in the
+        # input dtype, summed in float64 in dimension order (cumsum is a
+        # sequential accumulate), so the values are bit-identical to it.
+        # A block holds at most budget // dim pairs, so the per-pair
+        # product rows stay within the budget.
+        sq = np.cumsum(V * V, axis=1, dtype=np.float64)[:, -1]
+        for i, j, _ in _scored_pairs(
+            M, offs, lambda A, B: A @ B.transpose(0, 2, 1),
+            lambda c: c >= tpre, budget,
+        ):
+            dot = np.cumsum(V[i] * V[j], axis=1, dtype=np.float64)[:, -1]
+            ok = (sq[i] > 0) & (sq[j] > 0)
+            i, j, dot = i[ok], j[ok], dot[ok]
+            yield i, j, dot / (np.sqrt(sq[i]) * np.sqrt(sq[j]))
 
-    cand = (
-        b.select("band", "bucket", "vec_id", "embedding")
-        .groupBy("band", "bucket")
-        .applyInPandas(_bucket_pairs, "id_a long, id_b long")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # exact verify on the surviving pairs only, with the SAME fold
-    # expressions as the brute-force path — the output values are
-    # bit-identical to computing cosine on every candidate
-    va = embeddings.select(F.col(id_col).alias("id_a"),
-                           F.col(vec_col).alias("v_a"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"),
-                           F.col(vec_col).alias("v_b"))
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda a, bb: a * bb),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cos = dot / (_norm(F.col("v_a")) * _norm(F.col("v_b")))
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
+    pairs = _bucket_pairs(b, ["band", "bucket"], "vec_id", "embedding",
+                          cosine, "double", max_bucket_size, report)
+    cos = F.round(F.col("v"), 4).alias("cosine")
+    return _range_dedup(
+        pairs.select("id_a", "id_b", cos).filter(F.col("cosine") >= threshold)
     )
