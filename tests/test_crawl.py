@@ -433,10 +433,11 @@ def test_crawl_order_identical_across_pin_widths(spark):
 
 
 def test_fetch_extracts_hits_only(spark):
-    """Extraction runs over the fetch join's hits only: a miss has no body,
-    so its extraction columns are JVM literals equal to
-    parse_page(url, None), and the fetch+extract plan holds one Python
-    pass. The missing seed's resources rows keep their values."""
+    """The fetch is one left join of the batch onto the persisted corpus
+    and one extraction pass: a miss keeps its batch row with no body, and
+    parse_page(url, None) gives its extraction columns. The plan holds one
+    Python pass, one corpus scan and no misses branch. The missing seed's
+    resources rows keep their values."""
     from walk_spark.plans.crawl import Crawler
     missing = "http://self.test/nopage"
     cfg = CrawlConfig(seeds=["http://self.test", missing],
@@ -447,16 +448,20 @@ def test_fetch_extracts_hits_only(spark):
     assert not c._seed_norms  # fixed-point seeds: no normalize UDF
     plan = c._fetch(c._pick_batch(c._queued))._jdf.queryExecution() \
         .executedPlan().toString()
-    # Python passes outside the cached corpus (its prep ran in warm())
-    evals, cached_at = [], None
+    # plan lines outside the cached corpus (its prep ran in warm())
+    outer, cached_at = [], None
     for ln in plan.splitlines():
         col = re.search(r"[A-Za-z]", ln).start()
         if cached_at is not None and col > cached_at:
             continue
         cached_at = col if "InMemoryRelation" in ln else None
-        if "ArrowEvalPython" in ln:
-            evals.append(ln)
+        outer.append(ln)
+    evals = [ln for ln in outer if "ArrowEvalPython" in ln]
     assert len(evals) == 1 and "_extract_batch" in evals[0], plan
+    assert not any("LeftAnti" in ln or "Union" in ln for ln in outer), plan
+    assert sum("InMemoryTableScan" in ln for ln in outer) == 1, plan
+    assert any("ShuffledHashJoin" in ln and "LeftOuter" in ln
+               and "BuildLeft" in ln for ln in outer), plan
 
     r = c.run()
     rows = r.resources.filter(F.col("url") == missing).collect()
@@ -470,3 +475,49 @@ def test_fetch_extracts_hits_only(spark):
     by_url = {x["url"]: x["status"] for x in r.frontier.collect()}
     assert by_url[missing] == "failed"
     assert by_url["http://self.test/a.html"] == "done"
+
+
+@pytest.mark.parametrize("host,via", [
+    ("[::1]:8080", "seeds"),
+    ("[::1]:8080", "add_seeds"),
+    ("[::1]:8080", "add_seeds_df"),
+    ("[2001:db8::1]", "seeds"),
+])
+def test_ipv6_literal_seed_fetched_once(spark, host, via):
+    """A bracketed IPv6 seed and the links back to it get the same host
+    key (and so the same seen-set partition) whichever way the seed was
+    enqueued, so the seen anti-join drops the link: no url is fetched
+    twice."""
+    from walk_spark.plans.crawl import Crawler
+    seed = f"http://{host}/a.html"
+    cfg = CrawlConfig(seeds=[seed] if via == "seeds" else [],
+                      domains=[f"http://{host}"])
+    c = Crawler(spark, self_linking_pages(spark, host), cfg)
+    if via == "add_seeds":
+        c.add_seeds([seed])
+    elif via == "add_seeds_df":
+        assert c.add_seeds_df(
+            spark.createDataFrame([(seed,)], "url string")) == 1
+    urls = [x["url"] for x in c.run().order.collect()]
+    assert len(urls) == len(set(urls)) == 4, urls
+
+
+def test_superstep_phase_labels(spark):
+    """Every superstep labels its jobs with exactly one set of
+    ss<k>:<phase> descriptions — the contract the benchmark's per-phase
+    metrics parse."""
+    from walk_spark.plans.crawl import Crawler
+    cfg = CrawlConfig(seeds=["http://self.test"], domains=["http://self.test"],
+                      use_bloom=True, bloom_num_bits=65536, seen_partitions=4)
+    c = Crawler(spark, self_linking_pages(spark), cfg)
+    labels, jd = [], c._jd
+    c._jd = lambda label: (labels.append(label), jd(label))[1]
+    r = c.run()
+    assert len(r.metrics) == 2
+    phases: dict[str, set] = {}
+    for label in labels:
+        k, phase = label.split(":", 1)
+        phases.setdefault(k, set()).add(phase)
+    want = {"bloom_merge", "fetch_extract", "metrics_agg", "expand_build",
+            "seq_assign", "checkpoint"}
+    assert phases == {"ss1": want, "ss2": want}

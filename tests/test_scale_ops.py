@@ -41,10 +41,11 @@ def test_with_global_seq_dense_and_ordered(spark):
         F.lit(0).alias("ordinal"),
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
     )
-    out = with_global_seq(
+    out, n = with_global_seq(
         df, ["parent_depth", "parent_seq", "ordinal", "url"],
         seq_col="seq", start=42,
     )
+    assert n == 1000
     rows = out.orderBy("seq").collect()
     assert [r["seq"] for r in rows] == list(range(42, 42 + 1000))
     keys = [(r["parent_depth"], r["parent_seq"], r["ordinal"], r["url"])
@@ -60,12 +61,12 @@ def test_with_global_seq_partition_invariance(spark):
         F.lit(0).alias("ordinal"),
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
     )
-    a = with_global_seq(base.repartition(3),
-                        ["parent_depth", "parent_seq", "ordinal", "url"],
-                        seq_col="seq")
-    b = with_global_seq(base.repartition(17),
-                        ["parent_depth", "parent_seq", "ordinal", "url"],
-                        seq_col="seq")
+    a, _ = with_global_seq(base.repartition(3),
+                           ["parent_depth", "parent_seq", "ordinal", "url"],
+                           seq_col="seq")
+    b, _ = with_global_seq(base.repartition(17),
+                           ["parent_depth", "parent_seq", "ordinal", "url"],
+                           seq_col="seq")
     ka = {(r["url"], r["seq"]) for r in a.collect()}
     kb = {(r["url"], r["seq"]) for r in b.collect()}
     assert ka == kb
@@ -260,8 +261,9 @@ def test_with_global_seq_bucket_path_matches_range_path(spark):
     nb, g = 64, 5000 // 64 + 1
     bucket = (F.col("parent_depth").cast("long") * F.lit(nb)
               + F.floor(F.col("parent_seq") / F.lit(g)).cast("long"))
-    a = with_global_seq(df, cols, seq_col="seq", start=7)
-    b = with_global_seq(df, cols, seq_col="seq", start=7, bucket=bucket)
+    a, n_a = with_global_seq(df, cols, seq_col="seq", start=7)
+    b, n_b = with_global_seq(df, cols, seq_col="seq", start=7, bucket=bucket)
+    assert n_a == n_b == 2000
     ka = {(r["url"], r["seq"]) for r in a.collect()}
     kb = {(r["url"], r["seq"]) for r in b.collect()}
     assert ka == kb

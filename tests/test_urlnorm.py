@@ -10,7 +10,7 @@ import pytest
 
 from walk_spark.functions.urlnorm import (
     canonical_host, normalize_url, normalize_url_series,
-    resolve_and_normalize, surt,
+    resolve_and_normalize, surt, url_parts_col,
 )
 
 GOLDEN = [
@@ -81,6 +81,29 @@ def test_canonical_host():
     assert canonical_host("https://WWW.Example.com:8443/p") == "example.com"
     assert canonical_host("http://a.b.c.test/x") == "a.b.c.test"
     assert canonical_host(":::") == ""
+
+
+URL_PARTS = [
+    # url -> (authority, host, path)
+    ("http://[::1]:8080/a.html", ("[::1]:8080", "[::1]", "/a.html")),
+    ("http://[2001:DB8::1]/x", ("[2001:db8::1]", "[2001:db8::1]", "/x")),
+    ("http://user@[::1]:443", ("user@[::1]:443", "[::1]", "")),
+    ("http://u:p@WWW.A.com:80/p?q#f", ("u:p@www.a.com:80", "a.com", "/p")),
+    ("http://a.com#f/g", ("a.com", "a.com", "")),
+    ("http://www.a.com/x#frag", ("www.a.com", "a.com", "/x")),
+    ("http://a.com?u=http://b.com/", ("a.com", "a.com", "")),
+    ("HTTP://WWW.A.COM", ("www.a.com", "a.com", "")),
+    ("http://wwwx.test:8080/", ("wwwx.test:8080", "wwwx.test", "/")),
+    ("mailto:x@y.com", ("", "", "")),
+]
+
+
+def test_url_parts_col(spark):
+    df = spark.createDataFrame([(u,) for u, _ in URL_PARTS], "url string")
+    auth, host, path = url_parts_col(df["url"])
+    got = {r["url"]: (r["a"], r["h"], r["p"]) for r in df.select(
+        "url", auth.alias("a"), host.alias("h"), path.alias("p")).collect()}
+    assert got == dict(URL_PARTS)
 
 
 def test_surt():

@@ -6,9 +6,10 @@ idempotence, scheme forcing, no fragments, no trailing slash, SURT totality.
 import string
 
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from walk_spark.functions.urlnorm import (
-    canonical_host, normalize_url, resolve_and_normalize, surt,
+    canonical_host, normalize_url, resolve_and_normalize, surt, url_parts_col,
 )
 
 _host_label = st.text(
@@ -98,3 +99,25 @@ def test_resolve_never_raises(base, href):
 def test_canonical_host_matches_normalized(u):
     # host grouping key must agree between raw and canonical url forms
     assert canonical_host(u) == canonical_host(normalize_url(u))
+
+
+def _parse_url_host(url):
+    """The java.net.URI-based host key that url_parts_col replaced:
+    parse_url HOST, lowercased, www-stripped."""
+    h = F.lower(F.try_parse_url(url, F.lit("HOST")))
+    return F.coalesce(F.regexp_replace(h, r"^www\.", ""), F.lit(""))
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(urls(), min_size=1, max_size=100))
+def test_url_parts_col_matches_parse_url(spark, us):
+    # one Spark job per example: a list of urls, not one url
+    df = spark.createDataFrame([(u,) for u in us], "url string").filter(
+        F.try_parse_url("url", F.lit("HOST")).isNotNull())
+    auth, host, path = url_parts_col(F.col("url"))
+    bad = df.filter(
+        (host != _parse_url_host(F.col("url")))
+        | (auth != F.lower(F.try_parse_url("url", F.lit("AUTHORITY"))))
+        | (path != F.try_parse_url("url", F.lit("PATH")))
+    ).collect()
+    assert not bad

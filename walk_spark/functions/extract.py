@@ -256,17 +256,6 @@ def extract_udf():
     return F.pandas_udf(_extract_batch, returnType=EXTRACT_SCHEMA)
 
 
-def no_body_extraction() -> list:
-    """``parse_page(url, None)`` as JVM literal columns named like
-    EXTRACT_SCHEMA: a page with no body extracts to the same row whatever
-    its url, so rows known to have none need no Python pass."""
-    return [
-        (F.array() if isinstance(v, list) else F.lit(v))
-        .cast(f.dataType).alias(f.name)
-        for f, v in zip(EXTRACT_SCHEMA.fields, parse_page("", None))
-    ]
-
-
 def with_extraction(df, url_col: str = "url", html_col: str = "html"):
     """Append extraction columns to a pages DataFrame.
 

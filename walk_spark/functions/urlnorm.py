@@ -16,7 +16,8 @@ FlagsUnsafeGreedy =
 All functions are pure Python on strings, wrapped in pandas-vectorized
 variants for Arrow UDF use. Also provides SURT keys (the CDXJ index sort
 order, reference lib/resource_handler.go:157-175 / lib/walk.go:21-22) and
-canonical hosts for politeness grouping / seen-set partitioning.
+canonical hosts for politeness grouping / seen-set partitioning —
+``url_parts_col`` is the JVM-side one every frontier row's host comes from.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ import re
 from urllib.parse import urlsplit, urlunsplit, urljoin
 
 import pandas as pd
+from pyspark.sql import Column, functions as F
 
 _RX_DIR_INDEX = re.compile(r"(^|/)((?:default|index)\.\w{1,4})$")
 _RX_DUP_SLASH = re.compile(r"/{2,}")
@@ -211,6 +213,42 @@ def canonical_host(url: str) -> str:
     return _RX_WWW.sub("", host.lower())
 
 
+_MAX_LEN = 2147483647
+
+
+def _cut(s: Column, delims: str) -> Column:
+    """``s`` up to the first of any character in ``delims``."""
+    for d in delims:
+        s = F.substring_index(s, d, 1)
+    return s
+
+
+def url_parts_col(url: Column) -> tuple[Column, Column, Column]:
+    """JVM-side (authority, host, path) of a url column by string slicing —
+    the crawl's one host key: seeds, late seeds, redirect terminals,
+    hot-host detection and candidates all take ``host`` (and so their
+    seen-set partition) from here, so equal urls always land in the same
+    partition.
+
+    The authority is the lowercased text between "://" and the first "/",
+    "?" or "#" ("" without "://"). The host is the authority after its
+    last "@", a bracketed IPv6 literal kept whole (``[::1]``) or else cut
+    at the port's ":", with a leading "www." stripped. The path runs from
+    the authority to the first "?" or "#". No java.net.URI parse (a
+    ``parse_url`` costs a URI construction per call): a url whose path URI
+    rejects still keeps its host, as with Go's url.Parse."""
+    sep = F.locate("://", url)
+    rest = F.when(sep > 0, F.substring(url, sep + 3, _MAX_LEN)).otherwise("")
+    raw_auth = _cut(rest, "/?#")
+    auth = F.lower(raw_auth)
+    hp = F.substring_index(auth, "@", -1)
+    host = F.when(
+        hp.startswith("["), F.substring(hp, 1, F.instr(hp, "]"))
+    ).otherwise(F.substring_index(hp, ":", 1))
+    path = _cut(F.substring(rest, F.length(raw_auth) + 1, _MAX_LEN), "?#")
+    return auth, F.regexp_replace(host, r"^www\.", ""), path
+
+
 def surt(url: str) -> str:
     """SURT (Sort-friendly URI Reordering Transform) key, the CDXJ index
     ordering (reference lib/walk.go:21-22, resource_handler.go:157-175):
@@ -269,10 +307,6 @@ def normalize_url_series(s: pd.Series) -> pd.Series:
     # None propagates (NULL in, NULL out) so nullable columns like
     # redirect_to keep their is-null semantics through normalization
     return s.map(lambda x: None if x is None else normalize_url(x))
-
-
-def canonical_host_series(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: canonical_host(x) if x is not None else "")
 
 
 def surt_series(s: pd.Series) -> pd.Series:

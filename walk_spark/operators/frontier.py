@@ -49,22 +49,14 @@ FRONTIER_SCHEMA = StructType(
 ORDER_COLS = ["depth", "discovery_seq", "url"]
 
 
-def canonical_host_col(url: Column) -> Column:
-    """JVM-side canonical host: parse_url HOST, lowercased, www-stripped."""
-    h = F.lower(F.try_parse_url(url, F.lit("HOST")))
-    return F.coalesce(F.regexp_replace(h, r"^www\.", ""), F.lit(""))
-
-
 def with_global_seq(
     df: DataFrame,
     sort_cols: list[str],
     seq_col: str = "discovery_seq",
     start: int = 0,
     num_partitions: int | None = None,
-    return_count: bool = False,
-    materialize: bool = True,
     bucket: Column | None = None,
-):
+) -> tuple[DataFrame, int]:
     """Assign a dense global sequence 0..n-1 in ``sort_cols`` order —
     scalable two-phase ranking (NO single-partition window):
 
@@ -91,10 +83,10 @@ def with_global_seq(
     SURVEY.md §4 item 4) as long as ``sort_cols`` are a unique key (callers
     include ``url``) — and identical between the bucket and range paths.
 
-    ``materialize=False`` returns the ranked output LAZY (the window runs
-    when the caller next materializes state) — callers inside a loop that
-    pins merged state anyway (the crawl superstep) save one eager
-    checkpoint job per iteration.
+    Returns ``(ranked, n)``: the ranked output is LAZY (the window runs
+    when the caller next materializes state — the crawl superstep's
+    frontier pin), and ``n`` is the row count the offsets already paid
+    for, so callers need no separate count() job.
     """
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
@@ -133,7 +125,7 @@ def with_global_seq(
         out = d0.withColumn(seq_col, F.lit(start).cast("long"))
         if bucket is not None:
             out = out.drop("_pid")
-        return (out, 0) if return_count else out
+        return out, 0
     off_expr = F.create_map(
         *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
     )
@@ -145,9 +137,5 @@ def with_global_seq(
         )
         .drop("_pid")
     )
-    if materialize:
-        out = out.coalesce(num_partitions).localCheckpoint(eager=True)
-    # the per-partition counts were already collected for the offsets — hand
-    # the total back so callers don't pay a separate count() job
-    return (out, total) if return_count else out
+    return out, total
 

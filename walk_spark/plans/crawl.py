@@ -51,15 +51,15 @@ from pyspark.sql.types import (
 )
 
 from walk_spark.config import CrawlConfig
-from walk_spark.functions.extract import no_body_extraction, with_extraction
+from walk_spark.functions.extract import with_extraction
 from walk_spark.functions.urlnorm import (
-    canonical_host, normalize_url, normalize_url_series,
+    normalize_url, normalize_url_series, url_parts_col,
 )
 from walk_spark.operators import dedup as D
 from walk_spark.operators import politeness as P
 from walk_spark.operators.frontier import (
     FRONTIER_SCHEMA, ORDER_COLS, STATUS_DONE, STATUS_FAILED, STATUS_QUEUED,
-    STATUS_REDIRECTED, canonical_host_col, with_global_seq,
+    STATUS_REDIRECTED, with_global_seq,
 )
 
 RESOURCES_SCHEMA = StructType(
@@ -111,10 +111,6 @@ PIN_WIDTH_FACTOR = 3
 PIN_ROWS_PER_PARTITION = 50_000
 
 _norm_udf = F.pandas_udf(normalize_url_series, returnType=StringType())
-
-
-def _canonical_host_py(url: str) -> str:
-    return canonical_host(url)
 
 
 @dataclass
@@ -230,7 +226,7 @@ class Crawler:
         from pyspark import StorageLevel
         if self.pages is not None:
             self.pages = self.pages.repartition(
-                self._corpus_parts(), "p_url_norm"
+                self._pin_parts, "p_url_norm"
             ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
         self._has_redirects: bool | None = None
         self._chains: DataFrame | None = None
@@ -305,11 +301,6 @@ class Crawler:
         self._backoff_hosts: DataFrame | None = None
 
     # -- preparation -------------------------------------------------------
-
-    def _corpus_parts(self) -> int:
-        """Partition count for the persisted corpus — matches the pin width
-        so joins against it need no corpus-side exchange."""
-        return self._pin_parts
 
     @staticmethod
     def _parse_domain(d: str) -> tuple[str, str]:
@@ -386,28 +377,30 @@ class Crawler:
                 self._seed_norms[u] = n
         self._seed_norm_df = None  # rebuilt lazily on next use
 
-    def _seed_frontier(self) -> DataFrame:
-        rows = [
-            (
-                u,                       # exact raw seed string (not normalized
-                #                          — reference lib/coordinator.go:174-178)
-                _canonical_host_py(u),
-                0, i, STATUS_QUEUED, 0, 0, 0, 0, self.cfg.job_id,
-            )
-            for i, u in enumerate(self.cfg.all_seeds())
-        ]
-        self._note_seed_norms([r[0] for r in rows])
-        self.next_seq = len(rows)
-        df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        return df.withColumn(
-            "part_id", self._part_id_col(F.col("host"), F.col("url"))
-        )
+    def _seed_rows(self, seeds: list[str], seq0: int) -> DataFrame:
+        """Depth-0 queued frontier rows for driver-side seeds, enqueued as
+        the exact raw strings (not normalized — reference
+        lib/coordinator.go:174-178), seqs from ``seq0`` in list order.
+        Notes their normal forms, so _fetch keeps the map path."""
+        self._note_seed_norms(seeds)
+        rows = [(u, None, 0, seq0 + i, STATUS_QUEUED, 0, 0, self.superstep,
+                 0, self.cfg.job_id) for i, u in enumerate(seeds)]
+        return self._with_host(
+            self.spark.createDataFrame(rows, FRONTIER_SCHEMA))
+
+    def _with_host(self, df: DataFrame) -> DataFrame:
+        """``df`` with ``host`` and ``part_id`` (set or replaced) derived
+        from its ``url``."""
+        host = url_parts_col(F.col("url"))[1]
+        return df.withColumns({
+            "host": host, "part_id": self._part_id_col(host, F.col("url")),
+        })
 
     def _detect_hot_hosts(self) -> list[str]:
         """Auto-detect hot hosts from corpus page counts (one groupBy at
         init; the list is then FIXED for the crawl so part_id stays a pure
         function of url)."""
-        host_col = canonical_host_col(F.col("p_url"))
+        host_col = url_parts_col(F.col("p_url"))[1]
         rows = (
             self.pages.groupBy(host_col.alias("h"))
             .count()
@@ -797,57 +790,34 @@ class Crawler:
         # output was repartitioned post-hoc to spread extraction, pushing
         # every joined html byte (~GBs per superstep) through a second
         # full shuffle — pure memory-bus traffic that scaled at ~1x with
-        # cores. The batch side (narrow rows) is the only thing shuffled,
-        # and both the hits and misses joins reuse this one exchange.
+        # cores. The batch side (narrow rows) is the only thing shuffled.
         b = b.repartition(self._pin_parts, "final_url_norm")
-        # content join, structured as INNER + miss-anti instead of LEFT
-        # OUTER: an outer join forces sort-merge with the corpus side sorted
-        # (html bytes!) every superstep — measured 4x slowdown at high
-        # parallelism from sort spills. The SHUFFLE_HASH hint on the batch
-        # side makes the strategy explicit (guide §3.1): hash-build the
-        # narrow batch rows, STREAM the corpus — without it the planner's
-        # size estimates (checkpoint-backed batch = unknown) fell back to
-        # sort-merge, which sorted the html-bearing corpus partitions every
-        # superstep. Build side is the politeness-capped batch (narrow
-        # url+ints rows), bounded per partition at any corpus scale.
-        # Misses are recovered with a batch-sized anti-join.
+        # content join, LEFT OUTER with a SHUFFLE_HASH hint on the batch
+        # side (ShuffledHashJoin LeftOuter BuildLeft): hash-build the
+        # narrow batch rows, STREAM the corpus. Without the hint the
+        # planner's size estimates (checkpoint-backed batch = unknown) fell
+        # back to sort-merge, which sorted the html-bearing corpus
+        # partitions every superstep (measured 4x slower at high
+        # parallelism from sort spills). Build side is the politeness-
+        # capped batch, bounded per partition at any corpus scale. A miss
+        # keeps its batch row with NULL page columns; its extraction is
+        # parse_page(url, None).
         pages = self.pages.drop("p_redir_norm")
-        hits = _extract_fetched(b.hint("shuffle_hash").join(
-            pages, b.final_url_norm == pages.p_url_norm, "inner"
+        return _extract_fetched(b.hint("shuffle_hash").join(
+            pages, b.final_url_norm == pages.p_url_norm, "left"
         ))
-        misses = b.join(
-            pages.select("p_url_norm"),
-            b.final_url_norm == pages.p_url_norm,
-            "left_anti",
-        )
-        for f in pages.schema.fields:
-            misses = misses.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-        # a miss has no body, so its extraction is a constant row: JVM
-        # literals, not a Python pass of its own (which ran _pin_parts
-        # Python tasks per superstep, nearly all over no rows)
-        return hits.unionByName(misses.select("*", *no_body_extraction()))
 
-    def _candidate_filter_expr(self, authority=None, path=None):
+    def _candidate_filter_expr(self, authority, path):
         """P7 (lib/job.go:250-271): reject ignore-pattern substrings; accept
-        iff some domain authority matches AND path has the domain's prefix.
-
-        ``authority``/``path`` columns may be passed precomputed (the hot
-        candidate path derives both from ONE parse_url — see _superstep);
-        prefix-less domains collapse into a single ``isin`` (an O(1) hash
-        probe instead of an OR-chain of per-domain string compares — with
-        walk-scale domain lists the chain dominated candidate filtering)."""
+        iff some domain authority matches AND path has the domain's prefix
+        (``authority``/``path`` as from ``url_parts_col``). Prefix-less
+        domains collapse into a single ``isin`` (an O(1) hash probe instead
+        of an OR-chain of per-domain string compares — with walk-scale
+        domain lists the chain dominated candidate filtering)."""
         url = F.col("url")
-        if authority is None:
-            authority = F.lower(
-                F.coalesce(F.try_parse_url(url, F.lit("AUTHORITY")), F.lit(""))
-            )
         exact = [a for (a, pre) in self._domains if not pre]
         prefixed = [(a, pre) for (a, pre) in self._domains if pre]
         keep = authority.isin(exact) if exact else F.lit(False)
-        if prefixed and path is None:
-            path = F.coalesce(F.try_parse_url(url, F.lit("PATH")), F.lit(""))
         for (auth, pre) in prefixed:
             keep = keep | (
                 (authority == F.lit(auth)) & path.startswith(F.lit(pre))
@@ -872,26 +842,29 @@ class Crawler:
 
     def _ensure_state(self) -> None:
         if self.frontier is None:
-            self._queued = self._pin(self._seed_frontier())
+            seeds = self.cfg.all_seeds()
+            self._queued = self._pin(self._seed_rows(seeds, 0))
             self._term_parts = []
             self._rebuild_frontier_view()
             self.resources = self.spark.createDataFrame([], RESOURCES_SCHEMA)
             self.order = self.spark.createDataFrame([], ORDER_SCHEMA)
-            self._queued_count = len(self.cfg.all_seeds())
+            self.next_seq = self._queued_count = len(seeds)
             self._d0_queued = self._queued_count  # all seeds are depth 0
         elif self._queued is None:
-            # state arrived as one snapshot (resume): derive the split
-            # lazily — both filters read the same parquet/pin. Queued
-            # depth-0 rows of unknown provenance (the original run may
-            # have add_seeds'ed urls not in cfg) → normalize via the UDF
+            # state arrived as one snapshot (resume). Queued depth-0 rows
+            # of unknown provenance (the original run may have
+            # add_seeds'ed urls not in cfg) → normalize via the UDF
             # branch, never the driver-side seed map.
             self._streamed_d0 = True
-            self._queued = self.frontier.filter(
-                F.col("status") == STATUS_QUEUED
-            )
-            self._term_parts = [
-                self.frontier.filter(F.col("status") != STATUS_QUEUED)
-            ]
+            self._load_snapshot(self.frontier)
+
+    def _load_snapshot(self, frontier: DataFrame) -> None:
+        """State from one frontier snapshot (resume, durable checkpoint):
+        the queued/terminal split is derived lazily — both filters read
+        the same parquet/pin."""
+        self.frontier = frontier
+        self._queued = frontier.filter(F.col("status") == STATUS_QUEUED)
+        self._term_parts = [frontier.filter(F.col("status") != STATUS_QUEUED)]
 
     def add_seeds(self, seeds: list[str]) -> None:
         """Enqueue more seeds mid-crawl (the streaming-ingest path). Unlike
@@ -900,24 +873,13 @@ class Crawler:
         (first occurrence keeps the lowest seq) — so stream redelivery and
         duplicate-bearing micro-batches are both idempotent."""
         self._ensure_state()
-        _seen: set[str] = set()
-        seeds = [u for u in seeds if not (u in _seen or _seen.add(u))]
-        rows = [
-            (
-                u, _canonical_host_py(u), 0, self.next_seq + i, STATUS_QUEUED,
-                0, 0, self.superstep, 0, self.cfg.job_id,
-            )
-            for i, u in enumerate(seeds)
-        ]
-        if not rows:
+        seeds = list(dict.fromkeys(seeds))
+        if not seeds:
             return
-        self._note_seed_norms(seeds)  # driver-known: keep the map path
-        df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
-            "part_id", self._part_id_col(F.col("host"), F.col("url"))
-        )
-        fresh = df.join(self.frontier.select("url"), "url", "left_anti")
+        fresh = self._seed_rows(seeds, self.next_seq).join(
+            self.frontier.select("url"), "url", "left_anti")
         n = fresh.count()
-        self.next_seq += len(rows)  # seq values are unique, not dense
+        self.next_seq += len(seeds)  # seq values are unique, not dense
         if n:
             self._queued = self._pin(self._queued.unionByName(fresh))
             self._rebuild_frontier_view()
@@ -951,27 +913,20 @@ class Crawler:
         )
         ranked, n = with_global_seq(
             fresh, ["url"], start=self.next_seq,
-            num_partitions=self._pin_parts, return_count=True,
-            materialize=False,
+            num_partitions=self._pin_parts,
         )
         if n == 0:
             return 0
-        rows = (
-            ranked.withColumn("host", canonical_host_col(F.col("url")))
-            .select(
-                F.col("url"),
-                F.col("host"),
-                F.lit(0).cast("int").alias("depth"),
-                F.col("discovery_seq").cast("long"),
-                F.lit(STATUS_QUEUED).alias("status"),
-                F.lit(0).cast("int").alias("attempts"),
-                F.lit(0).cast("int").alias("prev_http_status"),
-                F.lit(self.superstep).cast("int").alias("superstep"),
-                self._part_id_col(F.col("host"), F.col("url"))
-                .cast("int").alias("part_id"),
-                F.lit(self.cfg.job_id).alias("job_id"),
-            )
-        )
+        rows = self._with_host(ranked.select(
+            F.col("url"),
+            F.lit(0).cast("int").alias("depth"),
+            F.col("discovery_seq").cast("long"),
+            F.lit(STATUS_QUEUED).alias("status"),
+            F.lit(0).cast("int").alias("attempts"),
+            F.lit(0).cast("int").alias("prev_http_status"),
+            F.lit(self.superstep).cast("int").alias("superstep"),
+            F.lit(self.cfg.job_id).alias("job_id"),
+        ))
         self.next_seq += n
         self._queued = self._pin(self._queued.unionByName(rows))
         self._rebuild_frontier_view()
@@ -1004,15 +959,9 @@ class Crawler:
         n_total = self.frontier.filter(hit).count()
         if n_total == 0:
             return 0
-        qrow = self._queued.filter(hit).agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum((F.col("depth") == 0).cast("long")), F.lit(0)
-            ).alias("n0"),
-        ).first()
-        n_q = qrow["n"]
+        n_q, n_q0 = _queued_counts(self._queued.filter(hit))
         if self._d0_queued is not None:
-            self._d0_queued -= int(qrow["n0"])
+            self._d0_queued -= n_q0
         if self._filters is not None:
             if self.cfg.seen_filter == "cuckoo":
                 from walk_spark.operators.cuckoo import delete_cuckoo_bytes
@@ -1045,16 +994,7 @@ class Crawler:
         collect already pays for — exact, zero extra jobs."""
         self._ensure_state()
         if self._queued_count is None:  # resume path: one count, once
-            qrow = self.frontier.filter(
-                F.col("status") == STATUS_QUEUED
-            ).agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum((F.col("depth") == 0).cast("long")), F.lit(0)
-                ).alias("n0"),
-            ).first()
-            self._queued_count = qrow["n"]
-            self._d0_queued = int(qrow["n0"])
+            self._queued_count, self._d0_queued = _queued_counts(self._queued)
         # NOTE (measured, round 6): running the loop with AQE disabled was
         # tried to cut the ~15 query-stage jobs/superstep AQE submits — and
         # LOST a same-session A/B 3/3 (17-28 s vs 12-14 s at bench shape):
@@ -1098,31 +1038,38 @@ class Crawler:
         )
 
     def _superstep(self, batch: DataFrame) -> bool:
+        """One BSP round over the picked ``batch``, one method per
+        ``ss<k>:`` phase. Returns True when a stop condition fired."""
         t0 = time.monotonic()
-        k = self.superstep
-        cfg = self.cfg
         # the filter update depends only on LAST superstep's frontier —
         # start it now on the helper thread so the filter build/merge
-        # overlaps the fetch join + extraction below instead of
-        # serializing after them
-        bloom_future = (
-            self._pool.submit(self._update_filters, self.frontier, k)
-            if cfg.use_bloom and cfg.crawl else None
+        # overlaps the fetch join + extraction instead of serializing
+        # after them
+        bloom = (
+            self._pool.submit(self._update_filters, self.frontier,
+                              self.superstep)
+            if self.cfg.use_bloom and self.cfg.crawl else None
         )
-        # batch is NOT materialized: its only computed consumer is the fetch
-        # join below (the order log and the stop-url probe both read the
-        # pinned `fetched` instead), and the politeness-window shuffles are
-        # reused across the hits/misses branches (ReusedExchange). One fewer
-        # eager job per superstep — fixed cost that never shrank with cores.
+        fetched = self._fetch_extract(batch)
+        upd, stats = self._record(fetched)
+        terminals = self._merge(upd)
+        n_new = self._expand(fetched, terminals, bloom) if self.cfg.crawl else 0
+        return self._account(upd, stats, n_new, t0)
 
-        # extraction is the CPU-dominant stage: _fetch runs it over input
-        # that is already _pin_parts wide (batch repartitioned onto the
-        # corpus partitioning before the join — no html re-shuffle; AQE
-        # would otherwise coalesce html-sized rows onto a handful of tasks:
-        # measured scaling efficiency 0.25 with 70k-page extractions on 2
-        # tasks)
-        fetched = self._fetch(batch)
-        fetched = fetched.withColumn(
+    def _fetch_extract(self, batch: DataFrame) -> DataFrame:
+        """Fetch + extraction with the outcome columns, pinned: the rows
+        every later phase re-reads (``ss<k>:fetch_extract``).
+
+        ``batch`` is NOT materialized: its only computed consumer is the
+        fetch join (the order log and the stop-url probe both read the
+        pinned result instead) — one fewer eager job per superstep, a fixed
+        cost that never shrank with cores. Extraction is the CPU-dominant
+        stage: _fetch runs it over input that is already _pin_parts wide
+        (batch repartitioned onto the corpus partitioning before the join —
+        no html re-shuffle; AQE would otherwise coalesce html-sized rows
+        onto a handful of tasks: measured scaling efficiency 0.25 with
+        70k-page extractions on 2 tasks)."""
+        fetched = self._fetch(batch).withColumn(
             "_err",
             F.coalesce(
                 F.col("_redirect_err"),
@@ -1143,9 +1090,15 @@ class Crawler:
             "content_length",
             F.coalesce(F.length("p_html").cast("long"), F.lit(0).cast("long")),
         ).drop("p_html")
-        self._jd(f"ss{k}:fetch_extract")
-        fetched = self._pin(fetched)
+        self._jd(f"ss{self.superstep}:fetch_extract")
+        return self._pin(fetched)
 
+    def _record(self, fetched: DataFrame) -> tuple:
+        """Resource and crawl-order rows of this superstep (lazy parts over
+        the pinned ``fetched``), and the status update rows ``upd`` (F2/F3).
+        Starts the status rows' aggregate (``ss<k>:metrics_agg``) on the
+        helper thread and returns ``(upd, future of its rows)``."""
+        cfg, k = self.cfg, self.superstep
         # ---- resources output (meta projection P10; body stays in pages)
         res_url = (
             F.when(
@@ -1200,8 +1153,14 @@ class Crawler:
             )
             res = res.unionByName(hops)
         self._res_parts.append(res)
+        # the order log derives from the PINNED fetched — free to re-read —
+        # so the unpinned batch has exactly one computed consumer
+        self._order_parts.append(fetched.select(
+            F.lit(k).alias("superstep"), "depth", "discovery_seq", "url"))
 
-        # ---- frontier status updates (F2/F3)
+        # ---- frontier status updates (F2/F3); a stateless projection over
+        # the pinned `fetched` — its few downstream re-evaluations are
+        # cheaper than a materialization job
         upd = fetched.select(
             "url", "host", "depth", "discovery_seq",
             (F.col("attempts") + 1).alias("attempts"),
@@ -1219,25 +1178,19 @@ class Crawler:
             .otherwise(F.lit(STATUS_FAILED)).alias("status"),
             F.col("final_url_norm"), F.col("_was_redirected"), F.col("_ok"),
         )
-        # upd is a stateless projection over the pinned `fetched` — its few
-        # downstream re-evaluations are cheaper than a materialization job
 
         # the metrics aggregation only needs the pinned `fetched`: launch it
         # on the helper thread NOW so it overlaps the expansion's
         # sequence-assignment jobs (independent Spark actions run
         # concurrently; results are timing-independent). ~0.5-1s of serial
         # driver latency per superstep — fixed cost that never scaled.
-        backoff_flag = (
-            F.col("prev_http_status").isin(cfg.backoff_codes)
-            if cfg.backoff_codes else F.lit(False)
-        )
         stop_flag = (
             (F.col("url") == F.lit(cfg.stop_url)).cast("int")
             if cfg.stop_url else F.lit(0)
         )
         stat_agg = upd.groupBy("status").agg(
             F.count("*").alias("n"),
-            F.sum(backoff_flag.cast("int")).alias("nb"),
+            F.sum(self._backoff_flag().cast("int")).alias("nb"),
             F.max(stop_flag).alias("stop"),
             # depth-0 rows per outcome: keeps the _d0_queued tracker exact
             # (picked depth-0 leave the queue; requeued ones re-enter)
@@ -1249,12 +1202,26 @@ class Crawler:
             self._jd(f"ss{k}:metrics_agg")
             return stat_agg.collect()
 
-        stat_future = self._pool.submit(_stat_job)
+        return upd, self._pool.submit(_stat_job)
 
+    def _backoff_flag(self):
+        """F12: did this status row's fetch return a backoff code."""
+        codes = self.cfg.backoff_codes
+        return F.col("prev_http_status").isin(codes) if codes else F.lit(False)
+
+    def _merge(self, upd: DataFrame) -> DataFrame | None:
+        """MERGE the status rows into the frontier state, split by status
+        (Iceberg shape): every upd row was picked from the ACTIVE set, so
+        only the active set is rewritten — (queued ⊲ batch urls) ∪
+        requeues; rows that reached a terminal status append as a lazy
+        projection of the pinned `fetched` and are never rewritten again.
+        Returns this superstep's new redirect terminals (None when
+        redirects are not recorded)."""
+        cfg, k = self.cfg, self.superstep
         # terminal urls of recorded redirects become their own frontier rows
         # (the reference "dequeues" never-queued final urls, creating them —
         # lib/coordinator.go:332-334); upsert: existing row wins its status
-        redirect_terminals = None
+        terminals = None
         if cfg.record_redirects:
             rt = (
                 upd.filter(F.col("_was_redirected") & F.col("_ok"))
@@ -1278,24 +1245,13 @@ class Crawler:
             ).join(
                 upd.select("url"), "url", "left_anti"
             )
-            host = canonical_host_col(F.col("url"))
-            redirect_terminals = rt.select(
-                "url",
-                host.alias("host"),
-                "depth", "discovery_seq",
+            terminals = self._with_host(rt.select(
+                "url", "depth", "discovery_seq",
                 F.lit(STATUS_DONE).alias("status"),
                 "attempts", "prev_http_status",
                 F.lit(k).alias("superstep"),
-                self._part_id_col(host, F.col("url")).alias("part_id"),
                 "job_id",
-            )
-
-        # MERGE, split by status (Iceberg shape): every upd row was picked
-        # from the ACTIVE set, so only the active set is rewritten —
-        # (queued ⊲ batch urls) ∪ requeues; rows that reached a terminal
-        # status append as a lazy projection of the pinned `fetched` and
-        # are never rewritten again. The old full-frontier anti-join
-        # rewrote every url ever seen, every superstep.
+            ))
         upd_rows = upd.select(*[f.name for f in FRONTIER_SCHEMA.fields])
         # the anti-join's right side is the batch (≤ the tracked queued
         # count): broadcast it when provably small so the pinned active set
@@ -1306,183 +1262,122 @@ class Crawler:
         if (self._queued_count is not None
                 and self._queued_count <= 1_000_000):
             upd_urls = F.broadcast(upd_urls)
-        new_queued = self._queued.join(
+        self._queued = self._queued.join(
             upd_urls, "url", "left_anti"
         ).unionByName(upd_rows.filter(F.col("status") == STATUS_QUEUED))
-        new_term = self._term_parts + [
+        self._term_parts = self._term_parts + [
             upd_rows.filter(F.col("status") != STATUS_QUEUED)
         ]
-        if redirect_terminals is not None:
-            new_term.append(redirect_terminals)
-        new_frontier = new_queued
-        for p in new_term:
-            new_frontier = new_frontier.unionByName(p)
-
-        # ---- expansion (F1/F13 + P7 + D1 + D2)
-        n_new = 0
-        if cfg.crawl:
-            cands = fetched.select(
-                F.col("depth").alias("parent_depth"),
-                F.col("discovery_seq").alias("parent_seq"),
-                F.posexplode_outer("links").alias("ordinal", "url"),
-            ).filter(F.col("url").isNotNull())
-            # candidates are the loop's highest-volume stream (pages ×
-            # out-degree): the old shape paid parse_url (a java.net.URI
-            # construction per call) 3-4× per candidate — domain filter,
-            # canonical host, robots path. Candidates are NORMALIZED urls
-            # (no fragments, scheme://authority[/path][?query]), so the
-            # authority is the slice between "://" and the first "/" or
-            # "?" — plain substring expressions, no URI parse at all.
-            # Urls without "://" get authority "" (can never match a
-            # domain). Deliberate deviation from java.net.URI strictness:
-            # a normalized url whose PATH java.net.URI would reject
-            # (e.g. an unencoded space) now keeps its authority and can
-            # match — which is Go url.Parse's behavior, i.e. closer to
-            # the reference than the old parse_url gate. All JVM-side —
-            # a Python pass here would double the superstep's UDF cost.
-            _sep = F.locate("://", F.col("url"))
-            _after = F.substring(
-                F.col("url"), _sep + F.lit(3), F.lit(2147483647)
-            )
-            cands = cands.withColumn(
-                "_auth",
-                F.when(
-                    _sep > 0,
-                    F.lower(F.substring_index(
-                        F.substring_index(_after, "/", 1), "?", 1
-                    )),
-                ).otherwise(F.lit("")),
-            )
-            need_path = (
-                any(pre for (_a, pre) in self._domains)
-                or self.robots is not None
-            )
-            if need_path:
-                # path+query start right after "scheme://" + authority;
-                # normalized candidates have no fragment, so the first '?'
-                # ends the path. Non-http(s)-shaped urls (no "://" → _auth
-                # "") get a garbage slice here but can never match a
-                # domain authority, so the filter drops them regardless.
-                rest = F.substring(
-                    F.col("url"),
-                    F.locate("://", F.col("url")) + F.lit(3)
-                    + F.length("_auth"),
-                    F.lit(2147483647),
-                )
-                cands = cands.withColumn(
-                    "_path", F.substring_index(rest, "?", 1)
-                )
-            cands = cands.filter(self._candidate_filter_expr(
-                authority=F.col("_auth"),
-                path=F.col("_path") if need_path else None,
-            ))
-            # canonical host ≡ functions.frontier.canonical_host_col, but
-            # from the short _auth slice: strip userinfo (after last '@'),
-            # strip port, strip leading www. Bracketed IPv6 hosts fall
-            # back to the parse_url expression.
-            _h = F.substring_index(
-                F.substring_index(F.col("_auth"), "@", -1), ":", 1
-            )
-            cands = cands.withColumn(
-                "host",
-                F.when(
-                    F.col("_auth").contains("["),
-                    canonical_host_col(F.col("url")),
-                ).otherwise(F.regexp_replace(_h, r"^www\.", "")),
-            )
-            cands = P.apply_robots(
-                cands, self.robots,
-                path_col="_path" if self.robots is not None else None,
-            )
-            cands = cands.drop("_auth", *(["_path"] if need_path else []))
-            # part_id BEFORE dedup, and dedup groups on (part_id, url):
-            # part_id is a pure function of url so the groups are the
-            # same, but the aggregate output then carries the anti-join's
-            # partitioning — dedup and anti-join share ONE shuffle of the
-            # candidate stream (the loop's highest-volume exchange)
-            cands = cands.withColumn(
-                "part_id", self._part_id_col(F.col("host"), F.col("url"))
-            )
-            cands = D.dedup_within_batch(cands, ("part_id", "url"))
-            seen = new_frontier.select("part_id", "url")
-            bc = None
-            if cfg.use_bloom:
-                filters = bloom_future.result()
-                if redirect_terminals is not None:
-                    # this superstep's redirect terminals are seen already
-                    # but join the frontier only at this superstep's end:
-                    # merge them into this broadcast's copy only (the next
-                    # update picks them up as frontier rows)
-                    self._jd(f"ss{k}:bloom_merge")
-                    filters = D.merge_filters(
-                        filters, self._build_filters(redirect_terminals),
-                        cfg.seen_filter)
-                bc = self.spark.sparkContext.broadcast(filters)
-                self._bloom_registry.append(bc)
-            self._jd(f"ss{k}:expand_build")
-            fresh = D.anti_join_seen(
-                cands, seen, prepared_bc=bc, filter_kind=cfg.seen_filter,
-            )
-            # anti_join_seen's lazy checkpoint materializes the candidate
-            # pipeline's shuffle stages here (AQE executes query stages on
-            # .rdd) — the expansion build, labelled apart from the seq pins
-            # materialize=False: the ranked output stays lazy — the frontier
-            # pin at checkpoint time materializes it, so the sequence
-            # assignment costs ONE collect job here instead of collect +
-            # eager checkpoint (the range-exchange is reused by the pin).
-            self._jd(f"ss{k}:seq_assign")
-            # deterministic monotone bucket over the sort-key prefix
-            # (parent_depth, parent_seq): every parent_seq is < next_seq
-            # (the driver-known high-water mark), so with G = ⌈next_seq/NB⌉
-            # the bucket  depth·NB + ⌊seq/G⌋  is monotone w.r.t. the full
-            # lexicographic key — with_global_seq then needs ONE pin and no
-            # range-sampling pass, and the assigned sequence is identical
-            # to the range path by construction (offsets come from actual
-            # per-bucket counts).
-            _nb = max(self._pin_parts, 1) * 8
-            _g = max(1, -(-max(self.next_seq, 1) // _nb))
-            _bucket = (
-                F.col("parent_depth").cast("long") * F.lit(_nb)
-                + F.floor(F.col("parent_seq") / F.lit(_g)).cast("long")
-            )
-            fresh, n_new = with_global_seq(
-                fresh,
-                ["parent_depth", "parent_seq", "ordinal", "url"],
-                seq_col="discovery_seq",
-                start=self.next_seq,
-                return_count=True,
-                materialize=False,
-                bucket=_bucket,
-            )
-            new_rows = fresh.select(
-                "url", "host",
-                (F.col("parent_depth") + 1).alias("depth"),
-                "discovery_seq",
-                F.lit(STATUS_QUEUED).alias("status"),
-                F.lit(0).alias("attempts"),
-                F.lit(0).alias("prev_http_status"),
-                F.lit(k).alias("superstep"),
-                "part_id",
-                F.lit(cfg.job_id).alias("job_id"),
-            )
-            self.next_seq += n_new
-            new_queued = new_queued.unionByName(new_rows)
-
-        self._queued = new_queued
-        self._term_parts = new_term
+        if terminals is not None:
+            self._term_parts.append(terminals)
         self._rebuild_frontier_view()
+        return terminals
 
-        # ---- crawl-order log + metrics (order derives from the PINNED
-        # fetched — free to re-read — so the unpinned batch has exactly one
-        # computed consumer, the fetch join)
-        self._order_parts.append(
-            fetched.select(
-                F.lit(k).alias("superstep"), "depth", "discovery_seq", "url"
-            )
+    def _expand(self, fetched: DataFrame, terminals: DataFrame | None,
+                bloom) -> int:
+        """Expansion (F1/F13 + P7 + D1 + D2): the fetched pages' links,
+        filtered to the crawl's domains and robots rules, deduped within
+        the batch and against the merged frontier, sequenced and queued
+        (``ss<k>:expand_build``, ``ss<k>:seq_assign``). ``bloom`` is the
+        future of the seen-set prefilter update (None without
+        ``use_bloom``). Returns the number of new urls."""
+        cfg, k = self.cfg, self.superstep
+        cands = fetched.select(
+            F.col("depth").alias("parent_depth"),
+            F.col("discovery_seq").alias("parent_seq"),
+            F.posexplode_outer("links").alias("ordinal", "url"),
+        ).filter(F.col("url").isNotNull())
+        # candidates are the loop's highest-volume stream (pages ×
+        # out-degree): authority, host and path come from string slicing
+        # (url_parts_col), never a java.net.URI parse. All JVM-side — a
+        # Python pass here would double the superstep's UDF cost. An
+        # unused _path is pruned from the plan.
+        auth, host, path = url_parts_col(F.col("url"))
+        cands = cands.withColumns({"_auth": auth, "_path": path})
+        cands = cands.filter(self._candidate_filter_expr(
+            F.col("_auth"), F.col("_path")
+        )).withColumn("host", host)
+        cands = P.apply_robots(cands, self.robots, path_col="_path")
+        cands = cands.drop("_auth", "_path")
+        # part_id BEFORE dedup, and dedup groups on (part_id, url):
+        # part_id is a pure function of url so the groups are the
+        # same, but the aggregate output then carries the anti-join's
+        # partitioning — dedup and anti-join share ONE shuffle of the
+        # candidate stream (the loop's highest-volume exchange)
+        cands = cands.withColumn(
+            "part_id", self._part_id_col(F.col("host"), F.col("url"))
         )
-        # join the concurrently-launched metrics aggregation (the stop-url
-        # probe F10 rides it — no separate batch-scan job)
-        stat_rows = stat_future.result()
+        cands = D.dedup_within_batch(cands, ("part_id", "url"))
+        seen = self.frontier.select("part_id", "url")
+        bc = None
+        if bloom is not None:
+            filters = bloom.result()
+            if terminals is not None:
+                # this superstep's redirect terminals are seen already
+                # but join the frontier only at this superstep's end:
+                # merge them into this broadcast's copy only (the next
+                # update picks them up as frontier rows)
+                self._jd(f"ss{k}:bloom_merge")
+                filters = D.merge_filters(
+                    filters, self._build_filters(terminals), cfg.seen_filter)
+            bc = self.spark.sparkContext.broadcast(filters)
+            self._bloom_registry.append(bc)
+        self._jd(f"ss{k}:expand_build")
+        fresh = D.anti_join_seen(
+            cands, seen, prepared_bc=bc, filter_kind=cfg.seen_filter,
+        )
+        # anti_join_seen's lazy checkpoint materializes the candidate
+        # pipeline's shuffle stages here (AQE executes query stages on
+        # .rdd) — the expansion build, labelled apart from the seq pins.
+        # The ranked output stays lazy — the frontier pin at checkpoint
+        # time materializes it, so the sequence assignment costs ONE
+        # collect job here instead of collect + eager checkpoint (the
+        # range-exchange is reused by the pin).
+        self._jd(f"ss{k}:seq_assign")
+        # deterministic monotone bucket over the sort-key prefix
+        # (parent_depth, parent_seq): every parent_seq is < next_seq
+        # (the driver-known high-water mark), so with G = ⌈next_seq/NB⌉
+        # the bucket  depth·NB + ⌊seq/G⌋  is monotone w.r.t. the full
+        # lexicographic key — with_global_seq then needs ONE pin and no
+        # range-sampling pass, and the assigned sequence is identical
+        # to the range path by construction (offsets come from actual
+        # per-bucket counts).
+        _nb = max(self._pin_parts, 1) * 8
+        _g = max(1, -(-max(self.next_seq, 1) // _nb))
+        _bucket = (
+            F.col("parent_depth").cast("long") * F.lit(_nb)
+            + F.floor(F.col("parent_seq") / F.lit(_g)).cast("long")
+        )
+        fresh, n_new = with_global_seq(
+            fresh,
+            ["parent_depth", "parent_seq", "ordinal", "url"],
+            seq_col="discovery_seq",
+            start=self.next_seq,
+            bucket=_bucket,
+        )
+        new_rows = fresh.select(
+            "url", "host",
+            (F.col("parent_depth") + 1).alias("depth"),
+            "discovery_seq",
+            F.lit(STATUS_QUEUED).alias("status"),
+            F.lit(0).alias("attempts"),
+            F.lit(0).alias("prev_http_status"),
+            F.lit(k).alias("superstep"),
+            "part_id",
+            F.lit(cfg.job_id).alias("job_id"),
+        )
+        self.next_seq += n_new
+        self._queued = self._queued.unionByName(new_rows)
+        self._rebuild_frontier_view()
+        return n_new
+
+    def _account(self, upd: DataFrame, stats, n_new: int,
+                 t0: float) -> bool:
+        """Join the status aggregate (``stats``, the stop-url probe F10
+        rides it — no separate batch-scan job): queue trackers, F12
+        backoff, the superstep's metrics row, and the stop verdict."""
+        cfg = self.cfg
+        stat_rows = stats.result()
         counts = {r["status"]: r["n"] for r in stat_rows}
         n_backoff = sum(r["nb"] or 0 for r in stat_rows)
         hit_stop = any(r["stop"] for r in stat_rows)
@@ -1500,13 +1395,13 @@ class Crawler:
         budget = cfg.effective_host_budget()
         if budget > 0 and n_backoff > 0:
             self._backoff_hosts = self._pin(
-                upd.filter(backoff_flag).select("host").distinct()
+                upd.filter(self._backoff_flag()).select("host").distinct()
                 .withColumn("budget", F.lit(max(1, budget // 2)))
             )
         else:
             self._backoff_hosts = None
-        m = {
-            "superstep": k,
+        self.metrics.append({
+            "superstep": self.superstep,
             "batch": sum(counts.values()),
             "done": counts.get(STATUS_DONE, 0),
             "redirected": counts.get(STATUS_REDIRECTED, 0),
@@ -1514,15 +1409,12 @@ class Crawler:
             "failed": counts.get(STATUS_FAILED, 0),
             "new_urls": n_new,
             "wall_s": round(time.monotonic() - t0, 3),
-        }
-        self.metrics.append(m)
-
-        stop = False
-        if cfg.stop_url and hit_stop:
-            stop = True  # F10
-        if cfg.stop_after_entries and self.total_done >= cfg.stop_after_entries:
-            stop = True  # F11 (enforced; commented out in the reference)
-        return stop
+        })
+        # F10 stop url; F11 entry cap (enforced; commented out in the
+        # reference)
+        return (bool(cfg.stop_url) and hit_stop) or (
+            cfg.stop_after_entries > 0
+            and self.total_done >= cfg.stop_after_entries)
 
     # -- durability (F17) ----------------------------------------------------
 
@@ -1559,15 +1451,9 @@ class Crawler:
         self.frontier.write.mode("overwrite").parquet(
             os.path.join(base, "frontier")
         )
-        self.frontier = self.spark.read.schema(self.frontier.schema).parquet(
-            os.path.join(base, "frontier")
-        )
-        # re-derive the split from the snapshot (both filters read the
-        # same parquet — the durable store replaces the in-memory pins)
-        self._queued = self.frontier.filter(F.col("status") == STATUS_QUEUED)
-        self._term_parts = [
-            self.frontier.filter(F.col("status") != STATUS_QUEUED)
-        ]
+        # the durable store replaces the in-memory pins
+        self._load_snapshot(self.spark.read.schema(self.frontier.schema)
+                            .parquet(os.path.join(base, "frontier")))
         # per-partition lineage (SURVEY F17: the Iceberg manifest table
         # shape (superstep, snapshot_id, rows_in, rows_out)): row counts per
         # seen-set partition of the frontier snapshot just written — a
@@ -1651,11 +1537,7 @@ class Crawler:
         c.frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(
             os.path.join(last["path"], "frontier")
         )
-        c._queued = c.frontier.filter(F.col("status") == STATUS_QUEUED)
-        c._term_parts = [c.frontier.filter(F.col("status") != STATUS_QUEUED)]
-        # queued depth-0 rows may include urls the original run
-        # add_seeds'ed (not in cfg) — normalize them via the UDF branch
-        c._streamed_d0 = True
+        c._ensure_state()
         backoff = last.get("backoff_hosts") or []
         if backoff:
             c._backoff_hosts = spark.createDataFrame(
@@ -1675,6 +1557,16 @@ class Crawler:
                     spark.read.schema(ORDER_SCHEMA).parquet(op)
                 )
         return c
+
+
+def _queued_counts(queued: DataFrame) -> tuple[int, int]:
+    """(rows, depth-0 rows) of queued frontier rows, in one aggregate."""
+    r = queued.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum((F.col("depth") == 0).cast("long")), F.lit(0))
+        .alias("n0"),
+    ).first()
+    return r["n"], int(r["n0"])
 
 
 def _extract_fetched(fetched: DataFrame) -> DataFrame:
