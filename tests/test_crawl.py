@@ -511,7 +511,12 @@ def test_superstep_phase_labels(spark):
                       use_bloom=True, bloom_num_bits=65536, seen_partitions=4)
     c = Crawler(spark, self_linking_pages(spark), cfg)
     labels, jd = [], c._jd
-    c._jd = lambda label: (labels.append(label), jd(label))[1]
+
+    def record(label):
+        labels.append(label)
+        jd(label)
+
+    c._jd = record
     r = c.run()
     assert len(r.metrics) == 2
     phases: dict[str, set] = {}
