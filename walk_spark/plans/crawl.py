@@ -706,9 +706,7 @@ class Crawler:
         # enqueued verbatim per lib/coordinator.go:174-178) can differ:
         # run the Python normalize UDF on those alone instead of the whole
         # batch (guide §4 — don't pay the JVM↔Python boundary for rows
-        # whose answer is the identity). A when() would NOT help here:
-        # Spark extracts Python UDFs into an eval node that runs on every
-        # row regardless of the branch, so the split must be a filter+union.
+        # whose answer is the identity).
         # When the tracked depth-0 queued count says NO seed-depth row can
         # be in this batch (the common steady state after superstep 1),
         # the plan carries no Python eval node and no union at all. While
