@@ -31,7 +31,7 @@ def main() -> int:
     from walk_spark.config import CrawlConfig
     from walk_spark.plans.crawl import Crawler
     from walk_spark.operators.sitemap import (
-        render_sitemap_json, sitemap_entries,
+        finalize_sitemap, sitemap_entries,
     )
 
     with open(args.job) as f:
@@ -47,8 +47,10 @@ def main() -> int:
     r.resources.write.mode("overwrite").parquet(f"{args.output}/resources")
     r.frontier.write.mode("overwrite").parquet(f"{args.output}/frontier")
     r.order.write.mode("overwrite").parquet(f"{args.output}/order")
-    with open(f"{args.output}/sitemap.json", "w") as f:
-        f.write(render_sitemap_json(sitemap_entries(r.ok_resources())))
+    # auto-switches to the distributed fragment table past 1M entries
+    # (sitemap.json.d, parts concatenating to the same bytes)
+    finalize_sitemap(sitemap_entries(r.ok_resources()),
+                     f"{args.output}/sitemap.json")
     print(json.dumps({"supersteps": len(r.metrics), "metrics": r.metrics}))
     return 0
 

@@ -100,11 +100,10 @@ def test_two_page_retry_and_dedup(spark):
 
 def test_requeued_raw_seed_still_normalized(spark):
     """A seed that needs normalization AND fails (500 -> requeue) must be
-    normalized on EVERY attempt, not just the first: the fetch path's
-    depth-0 tracking may skip the normalize UDF only for supersteps whose
-    batch provably contains no depth-0 row — a requeued seed keeps the
-    queue's depth-0 count nonzero, so each retry must still hit the corpus
-    row (status 500), never degrade to a 'not found' miss."""
+    normalized on EVERY attempt, not just the first: its normal form,
+    noted once at enqueue, keeps serving the fetch key, so each retry
+    still hits the corpus row (status 500), never degrades to a 'not
+    found' miss."""
     pages = spark.createDataFrame(
         [
             ("http://mixed.test", b"<html><body>boom</body></html>", 500),
@@ -132,21 +131,72 @@ def test_requeued_raw_seed_still_normalized(spark):
     assert by_url["http://mixed.test/ok"]["status"] == "done"
 
 
-def test_unknown_depth0_count_normalizes_seeds(spark):
-    """An UNKNOWN queued depth-0 count (tracker None) must take the
-    normalize-UDF fetch branch: a queued seed whose normal form the driver
-    never recorded is then still matched to its corpus row."""
+def test_resumed_raw_seed_normalized(spark, tmp_path):
+    """A non-normalized seed still queued in a durable snapshot is matched
+    to its corpus row after Crawler.resume: the resumed crawler notes the
+    snapshot's depth-0 fetch keys itself, with no seed list."""
     from walk_spark.plans.crawl import Crawler
-    cfg = CrawlConfig(seeds=["HTTP://WWW.Self.test"],
-                      domains=["http://self.test"])
-    c = Crawler(spark, self_linking_pages(spark), cfg)
-    c._ensure_state()
-    c._seed_norms.clear()   # provenance unknown to the driver ...
-    c._d0_queued = None     # ... and so is the depth-0 count
-    r = c.run()
-    seed = r.resources.filter(F.col("url") == "HTTP://WWW.Self.test").first()
-    assert seed["error"] is None and seed["status"] == 200
+    raw = "HTTP://WWW.Self.test/a.html"
+
+    def cfg(**kw):
+        # host budget 1: the first seed (a miss that fails at once) takes
+        # superstep 1, the raw seed stays queued in the snapshot
+        return CrawlConfig(seeds=["http://self.test/nopage", raw],
+                           domains=["http://self.test"], max_attempts=0,
+                           host_budget_per_superstep=1, **kw)
+
+    wd = str(tmp_path)
+    Crawler(spark, self_linking_pages(spark), cfg(max_supersteps=1),
+            workdir=wd).run()
+    r = Crawler.resume(spark, self_linking_pages(spark), cfg(), wd).run()
+    seed = r.resources.filter(F.col("url") == raw).collect()
+    assert len(seed) == 1
+    assert seed[0]["error"] is None and seed[0]["status"] == 200
     assert r.order.filter(F.col("depth") == 1).count() > 0  # links expanded
+
+
+def test_add_seeds_df_raw_url_normalized(spark):
+    """A non-normalized url streamed in with add_seeds_df after the crawl
+    finished is fetched under its normal form: status 200, no miss."""
+    from walk_spark.plans.crawl import Crawler
+    raw = "HTTP://WWW.Self.test/b.html"
+    c = Crawler(spark, self_linking_pages(spark), CrawlConfig(
+        seeds=["http://self.test"], domains=["http://self.test"]))
+    c.run()
+    assert c.add_seeds_df(spark.createDataFrame([(raw,)], "url string")) == 1
+    rows = c.run().resources.filter(F.col("url") == raw).collect()
+    assert len(rows) == 1
+    assert rows[0]["status"] == 200 and rows[0]["error"] is None
+
+
+def _outer_plan(df) -> list[str]:
+    """``df``'s executed plan lines outside cached relations (the corpus
+    prep ran when it was cached)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    outer, cached_at = [], None
+    for ln in plan.splitlines():
+        col = re.search(r"[A-Za-z]", ln).start()
+        if cached_at is not None and col > cached_at:
+            continue
+        cached_at = col if "InMemoryRelation" in ln else None
+        outer.append(ln)
+    return outer
+
+
+def test_add_seeds_df_normalized_urls_fetch_without_udf(spark):
+    """Streamed urls that are already normalized add no fetch key: the
+    fetch plan's only Python pass is the extraction."""
+    from walk_spark.plans.crawl import Crawler
+    c = Crawler(spark, self_linking_pages(spark), CrawlConfig(
+        seeds=["http://self.test"], domains=["http://self.test"]))
+    c.run()
+    assert c.add_seeds_df(spark.createDataFrame(
+        [("http://self.test/new.html",)], "url string")) == 1
+    assert not c._seed_norms
+    outer = _outer_plan(c._fetch(c._pick_batch(c._queued)))
+    evals = [ln for ln in outer if "ArrowEvalPython" in ln]
+    assert len(evals) == 1 and "_extract_batch" in evals[0], outer
+    c.close()
 
 
 def test_run_restores_caller_job_description(spark):
@@ -446,22 +496,13 @@ def test_fetch_extracts_hits_only(spark):
     c.warm()
     c._ensure_state()
     assert not c._seed_norms  # fixed-point seeds: no normalize UDF
-    plan = c._fetch(c._pick_batch(c._queued))._jdf.queryExecution() \
-        .executedPlan().toString()
-    # plan lines outside the cached corpus (its prep ran in warm())
-    outer, cached_at = [], None
-    for ln in plan.splitlines():
-        col = re.search(r"[A-Za-z]", ln).start()
-        if cached_at is not None and col > cached_at:
-            continue
-        cached_at = col if "InMemoryRelation" in ln else None
-        outer.append(ln)
+    outer = _outer_plan(c._fetch(c._pick_batch(c._queued)))
     evals = [ln for ln in outer if "ArrowEvalPython" in ln]
-    assert len(evals) == 1 and "_extract_batch" in evals[0], plan
-    assert not any("LeftAnti" in ln or "Union" in ln for ln in outer), plan
-    assert sum("InMemoryTableScan" in ln for ln in outer) == 1, plan
+    assert len(evals) == 1 and "_extract_batch" in evals[0], outer
+    assert not any("LeftAnti" in ln or "Union" in ln for ln in outer), outer
+    assert sum("InMemoryTableScan" in ln for ln in outer) == 1, outer
     assert any("ShuffledHashJoin" in ln and "LeftOuter" in ln
-               and "BuildLeft" in ln for ln in outer), plan
+               and "BuildLeft" in ln for ln in outer), outer
 
     r = c.run()
     rows = r.resources.filter(F.col("url") == missing).collect()

@@ -3,6 +3,8 @@
 merge, delete, bounded stash), anti_join_seen equivalence, and
 byte-identical crawls vs the bloom path."""
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -135,3 +137,19 @@ def test_cuckoo_crawl_equivalence(spark):
         ck = run(pages, seeds, domains, True, "cuckoo")
         bl = run(pages, seeds, domains, True, "bloom")
         assert ck == off == bl
+
+
+@pytest.mark.parametrize("build", [D.build_bloom_partitions,
+                                   C.build_cuckoo_partitions])
+def test_filter_build_has_inferable_type_hints(spark, build):
+    """Both per-partition filter builds give applyInPandas type hints it
+    can infer an eval type from: no "Cannot infer" UserWarning."""
+    seen = spark.range(0, 100).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 4).cast("int").alias("part_id"),
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        filters = D.collect_filters(build(seen, 0, 65536))
+    assert not [w for w in caught if "Cannot infer" in str(w.message)]
+    assert sorted(filters) == [0, 1, 2, 3]

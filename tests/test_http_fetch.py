@@ -254,3 +254,29 @@ def test_fetch_batch_robots_host_delay_override(spark):
         assert min(gaps0) < 0.2, gaps0
     finally:
         srv.shutdown()
+
+
+def test_http_crawl_paces_one_host_without_budget(spark):
+    """An http-mode crawl with no host budget still spaces one host's GETs
+    by http_delay_milli: the batch is split by host before the fetch, so
+    the host's urls run in one task, not in several concurrent ones."""
+    from walk_spark.config import CrawlConfig
+    from walk_spark.plans.crawl import crawl
+
+    _TimedHandler.times = []
+    srv = HTTPServer(("127.0.0.1", 0), _TimedHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_port}"
+    try:
+        cfg = CrawlConfig(
+            seeds=[f"{base}/s{i}.html" for i in range(6)], domains=[base],
+            fetch_mode="http", http_delay_milli=250,
+        )
+        r = crawl(spark, None, cfg)
+        assert r.ok_resources().count() == 6
+        ts = sorted(t for _, t in _TimedHandler.times)
+        assert len(ts) == 6
+        gaps = [b - a for a, b in zip(ts, ts[1:])]
+        assert all(g >= 0.225 for g in gaps), gaps
+    finally:
+        srv.shutdown()

@@ -93,6 +93,7 @@ def cmd_inbound_links(args) -> int:
 def cmd_clean(args) -> int:
     """Drop sitemap entries under a url prefix (cmd/clean.go)."""
     from walk_spark.operators.queries import clean
+    from walk_spark.plans.crawl import ok_resources
     from walk_spark.operators.sitemap import (
         render_sitemap_json, sitemap_entries,
     )
@@ -102,10 +103,7 @@ def cmd_clean(args) -> int:
     if is_sitemap:
         entries = res
     else:
-        entries = sitemap_entries(
-            res.filter("status between 200 and 308 and error is null "
-                       "and redirect_to is null")
-        )
+        entries = sitemap_entries(ok_resources(res))
     kept, stats = clean(entries, args.prefix)
     with open(args.output, "w") as f:
         f.write(render_sitemap_json(kept))
@@ -121,14 +119,13 @@ def cmd_normalize_url(args) -> int:
 
 def cmd_sitemap(args) -> int:
     """Render sitemap.json from a resources table (lib/sitemap.go:62-116)."""
+    from walk_spark.plans.crawl import ok_resources
     from walk_spark.operators.sitemap import (
         render_sitemap_json, sitemap_entries,
     )
     spark = _spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    res = spark.read.parquet(args.resources)
-    ok = res.filter("status between 200 and 308 and error is null "
-                    "and redirect_to is null")
+    ok = ok_resources(spark.read.parquet(args.resources))
     out = render_sitemap_json(sitemap_entries(ok))
     if args.output:
         with open(args.output, "w") as f:
@@ -148,13 +145,12 @@ def cmd_job_new(args) -> int:
 def cmd_server(args) -> int:
     """Serve a crawled walk's resources over the REST API — `walk server`
     (cmd/server.go:9-29; routes per api/server.go:47-68)."""
+    from walk_spark.plans.crawl import ok_resources
     from walk_spark.server import WalkServer
 
     spark = _spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    res = spark.read.parquet(args.resources)
-    ok = res.filter("status between 200 and 308 and error is null "
-                    "and redirect_to is null")
+    ok = ok_resources(spark.read.parquet(args.resources))
     frontier = (
         spark.read.parquet(args.frontier) if args.frontier else None
     )

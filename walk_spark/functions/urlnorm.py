@@ -292,13 +292,6 @@ def is_webpage_url(url: str) -> bool:
     return True
 
 
-def url_path(url: str) -> str:
-    try:
-        return urlsplit(url).path
-    except ValueError:
-        return ""
-
-
 # ---------------------------------------------------------------------------
 # pandas-vectorized wrappers (for use inside Arrow/pandas UDFs)
 # ---------------------------------------------------------------------------

@@ -329,7 +329,7 @@ def build_cuckoo_partitions(
     apply unchanged. Merge and delete then run on the collected bytes
     (``merge_cuckoo_bytes``, ``delete_cuckoo_bytes``)."""
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({
             "part_id": [int(key[0])],
             "bf": [build_cuckoo_bytes(pdf["url"], num_bits)],

@@ -132,7 +132,7 @@ def build_bloom_partitions(
     """
     nb = _aligned_bits(num_bits)
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros(nb // 8, dtype=np.uint8)
         pos = _url_hashes(pdf["url"], nb).ravel()
         np.bitwise_or.at(bits, pos >> np.uint64(3),

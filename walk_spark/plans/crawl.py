@@ -121,12 +121,17 @@ class CrawlResult:
     metrics: list = field(default_factory=list)
 
     def ok_resources(self) -> DataFrame:
-        """What the reference's handlers receive (lib/coordinator.go:368-377):
-        OK-status (200..308, lib/job.go:273-275) non-redirect-hop rows."""
-        return self.resources.filter(
-            F.col("status").between(200, 308) & F.col("error").isNull()
-            & F.col("redirect_to").isNull()
-        )
+        return ok_resources(self.resources)
+
+
+def ok_resources(resources: DataFrame) -> DataFrame:
+    """What the reference's handlers receive (lib/coordinator.go:368-377):
+    OK-status (200..308, lib/job.go:273-275) non-redirect-hop rows of a
+    resources table."""
+    return resources.filter(
+        F.col("status").between(200, 308) & F.col("error").isNull()
+        & F.col("redirect_to").isNull()
+    )
 
 
 class Crawler:
@@ -265,27 +270,16 @@ class Crawler:
         self._res_parts: list[DataFrame] = []
         self._order_parts: list[DataFrame] = []
         self._queued_count: int | None = None
-        #: exact count of QUEUED depth-0 rows (seeds are the only urls the
-        #: fetch path must still normalize — see _fetch). Maintained with
-        #: ZERO extra jobs: seeded from the driver-side seed list, updated
-        #: from the per-superstep metrics aggregate (picked vs requeued
-        #: depth-0), adjusted by add_seeds*/forget_urls, re-derived in the
-        #: same one-time aggregate run() pays on resume. None = unknown →
-        #: _fetch keeps the safe normalize branch.
-        self._d0_queued: int | None = None
-        #: raw seed -> normal form, for driver-known seeds whose normal
-        #: form DIFFERS from the raw string (well-formed seeds are fixed
-        #: points and are omitted). Lets _fetch attach url_norm with a
-        #: tiny broadcast map instead of a Python UDF pass: a non-fixed-
-        #: point key can never collide with a depth>0 url (those are
-        #: normalizer outputs, i.e. fixed points), so coalesce(map[url],
-        #: url) ≡ normalize(url) for every batch row — as long as every
-        #: queued depth-0 row came from a driver-side list
-        #: (``_streamed_d0`` guards the add_seeds_df / resumed-state
-        #: cases, which fall back to the UDF branch).
+        #: the one record of fetch keys: raw url -> normal form, for every
+        #: depth-0 url ever enqueued whose normal form DIFFERS from the raw
+        #: string (well-formed seeds are fixed points and are omitted).
+        #: Filled where a depth-0 row enters the frontier — seed lists
+        #: (_seed_rows), add_seeds_df and the resumed snapshot — so
+        #: _fetch never runs the normalize UDF. Entries are never removed
+        #: (a key matches only its own raw url, never a depth>0 url — see
+        #: _fetch).
         self._seed_norms: dict[str, str] = {}
         self._seed_norm_df: DataFrame | None = None
-        self._streamed_d0 = False
         #: standing URL-seen prefilter, DRIVER-owned {part_id: filter
         #: bytes} (cfg.seen_filter kind): built once from the frontier,
         #: then each superstep merges a build over only the rows enqueued
@@ -368,21 +362,31 @@ class Crawler:
             )
         return sel
 
-    def _note_seed_norms(self, seeds: list[str]) -> None:
-        """Record driver-side seeds' normal forms (diffs only) so _fetch
-        can use the broadcast-map path; costs ~µs per seed, once."""
-        for u in seeds:
-            n = normalize_url(u)
+    def _note_seed_norms(self, pairs) -> None:
+        """Record ``(raw, normal form)`` pairs of enqueued depth-0 urls
+        whose normal form differs from the raw string."""
+        for u, n in pairs:
             if n and n != u:
                 self._seed_norms[u] = n
-        self._seed_norm_df = None  # rebuilt lazily on next use
+                self._seed_norm_df = None  # rebuilt lazily on next use
+
+    def _note_seed_norms_df(self, rows: DataFrame) -> None:
+        """``_note_seed_norms`` over the depth-0 ``url``s of ``rows``: one
+        normalize-UDF projection whose collect carries only the urls whose
+        normal form differs, so already-normalized urls put nothing on the
+        driver."""
+        n = _norm_udf(F.col("url"))
+        self._note_seed_norms(
+            (r["url"], r["n"]) for r in
+            rows.filter(F.col("depth") == 0).select("url", n.alias("n"))
+            .filter(F.col("n") != F.col("url")).collect())
 
     def _seed_rows(self, seeds: list[str], seq0: int) -> DataFrame:
         """Depth-0 queued frontier rows for driver-side seeds, enqueued as
         the exact raw strings (not normalized — reference
         lib/coordinator.go:174-178), seqs from ``seq0`` in list order.
-        Notes their normal forms, so _fetch keeps the map path."""
-        self._note_seed_norms(seeds)
+        Notes their normal forms for _fetch (~µs per seed, once)."""
+        self._note_seed_norms((u, normalize_url(u)) for u in seeds)
         rows = [(u, None, 0, seq0 + i, STATUS_QUEUED, 0, 0, self.superstep,
                  0, self.cfg.job_id) for i, u in enumerate(seeds)]
         return self._with_host(
@@ -648,9 +652,12 @@ class Crawler:
         from walk_spark.sources.http_fetch import fetch_batch
 
         # the frontier's own status column ('queued') collides with the
-        # HTTP status — it is a constant for batch rows, re-added after
+        # HTTP status — it is a constant for batch rows, re-added after.
+        # One host's urls go to one task: fetch_batch paces a host only
+        # within a task, so a host spread over several concurrent tasks
+        # would be hit faster than its delay allows.
         f = fetch_batch(
-            batch.drop("status"),
+            batch.drop("status").repartition(self._pin_parts, "host"),
             user_agent=cfg.user_agent,
             timeout_s=cfg.fetch_timeout_s,
             max_redirects=cfg.max_redirects,
@@ -703,34 +710,13 @@ class Crawler:
         # already through resolve_and_normalize — and normalization is
         # idempotent (tests/test_urlnorm_properties.py::test_idempotent),
         # so their url IS its normal form. Only depth-0 rows (seeds,
-        # enqueued verbatim per lib/coordinator.go:174-178) can differ:
-        # run the Python normalize UDF on those alone instead of the whole
-        # batch (guide §4 — don't pay the JVM↔Python boundary for rows
-        # whose answer is the identity).
-        # When the tracked depth-0 queued count says NO seed-depth row can
-        # be in this batch (the common steady state after superstep 1),
-        # the plan carries no Python eval node and no union at all. While
-        # driver-known seeds ARE still queued, their normal forms were
-        # computed on the driver at enqueue time: a broadcast of the
-        # (raw, norm) DIFFS — usually empty, because well-formed seeds are
-        # normalization fixed points — replaces the UDF pass entirely (a
-        # non-fixed-point key cannot equal any depth>0 url, so the
-        # coalesce is exact). Only depth-0 rows of unknown provenance
-        # (add_seeds_df streams, resumed snapshots) keep the Python
-        # filter+union branch; a when() would not help there — Spark
-        # extracts Python UDFs into an eval node that runs on every row.
-        # An UNKNOWN depth-0 count (None) takes that safe branch too.
-        if self._d0_queued == 0:
-            b = batch.withColumn("url_norm", F.col("url"))
-        elif self._d0_queued is None or self._streamed_d0:
-            seeds0 = batch.filter(F.col("depth") == 0).withColumn(
-                "url_norm", _norm_udf(F.col("url"))
-            )
-            rest = batch.filter(F.col("depth") > 0).withColumn(
-                "url_norm", F.col("url")
-            )
-            b = seeds0.unionByName(rest)
-        elif not self._seed_norms:
+        # enqueued verbatim per lib/coordinator.go:174-178) can differ, and
+        # their normal forms were computed once, where they entered the
+        # frontier (_seed_norms). No seed differs (well-formed seeds are
+        # fixed points): url_norm = url, no Python pass. Otherwise a
+        # broadcast of the (raw, norm) diffs plus coalesce — exact,
+        # because a non-fixed-point key cannot equal any depth>0 url.
+        if not self._seed_norms:
             b = batch.withColumn("url_norm", F.col("url"))
         else:
             if self._seed_norm_df is None:
@@ -847,14 +833,12 @@ class Crawler:
             self.resources = self.spark.createDataFrame([], RESOURCES_SCHEMA)
             self.order = self.spark.createDataFrame([], ORDER_SCHEMA)
             self.next_seq = self._queued_count = len(seeds)
-            self._d0_queued = self._queued_count  # all seeds are depth 0
         elif self._queued is None:
-            # state arrived as one snapshot (resume). Queued depth-0 rows
-            # of unknown provenance (the original run may have
-            # add_seeds'ed urls not in cfg) → normalize via the UDF
-            # branch, never the driver-side seed map.
-            self._streamed_d0 = True
+            # state arrived as one snapshot (resume): its queued depth-0
+            # rows may come from cfg.seeds, add_seeds or add_seeds_df —
+            # note their normal forms once, from the rows themselves
             self._load_snapshot(self.frontier)
+            self._note_seed_norms_df(self._queued)
 
     def _load_snapshot(self, frontier: DataFrame) -> None:
         """State from one frontier snapshot (resume, durable checkpoint):
@@ -883,8 +867,6 @@ class Crawler:
             self._rebuild_frontier_view()
             if self._queued_count is not None:
                 self._queued_count += n
-            if self._d0_queued is not None:
-                self._d0_queued += n  # late seeds enqueue at depth 0
 
     def add_seeds_df(self, seeds: DataFrame, url_col: str = "url") -> int:
         """Enqueue a DataFrame of seed urls mid-crawl WITHOUT materializing
@@ -898,8 +880,11 @@ class Crawler:
         the batch and against the frontier; ``discovery_seq`` values are
         assigned deterministically in URL sort order (a DataFrame has no
         arrival order) via the same two-phase range rank the crawl loop
-        uses — no single-partition window, no collect of the urls (the
-        only driver data is the P-row offset map and the new-url count).
+        uses — no single-partition window. The driver receives the P-row
+        offset map, the new-url count and, from one normalize-UDF pass
+        over the enqueued rows, only the urls whose normal form differs
+        (the fetch keys _fetch needs); a stream of already-normalized urls
+        puts no url on the driver.
         Stream redelivery is idempotent: re-delivered urls anti-join away.
         """
         self._ensure_state()
@@ -925,16 +910,14 @@ class Crawler:
             F.lit(self.superstep).cast("int").alias("superstep"),
             F.lit(self.cfg.job_id).alias("job_id"),
         ))
-        self.next_seq += n
+        seq0, self.next_seq = self.next_seq, self.next_seq + n
         self._queued = self._pin(self._queued.unionByName(rows))
         self._rebuild_frontier_view()
+        # the new rows are the pinned queue's seqs from seq0 on
+        self._note_seed_norms_df(
+            self._queued.filter(F.col("discovery_seq") >= seq0))
         if self._queued_count is not None:
             self._queued_count += n
-        if self._d0_queued is not None:
-            self._d0_queued += n  # stream seeds enqueue at depth 0
-        # stream urls never pass through the driver, so their normal
-        # forms are unknown — depth-0 batches must use the UDF branch
-        self._streamed_d0 = True
         return n
 
     def forget_urls(self, urls: list[str]) -> int:
@@ -957,9 +940,7 @@ class Crawler:
         n_total = self.frontier.filter(hit).count()
         if n_total == 0:
             return 0
-        n_q, n_q0 = _queued_counts(self._queued.filter(hit))
-        if self._d0_queued is not None:
-            self._d0_queued -= n_q0
+        n_q = self._queued.filter(hit).count()
         if self._filters is not None:
             if self.cfg.seen_filter == "cuckoo":
                 from walk_spark.operators.cuckoo import delete_cuckoo_bytes
@@ -992,7 +973,7 @@ class Crawler:
         collect already pays for — exact, zero extra jobs."""
         self._ensure_state()
         if self._queued_count is None:  # resume path: one count, once
-            self._queued_count, self._d0_queued = _queued_counts(self._queued)
+            self._queued_count = self._queued.count()
         # NOTE (measured, round 6): running the loop with AQE disabled was
         # tried to cut the ~15 query-stage jobs/superstep AQE submits — and
         # LOST a same-session A/B 3/3 (17-28 s vs 12-14 s at bench shape):
@@ -1190,10 +1171,6 @@ class Crawler:
             F.count("*").alias("n"),
             F.sum(self._backoff_flag().cast("int")).alias("nb"),
             F.max(stop_flag).alias("stop"),
-            # depth-0 rows per outcome: keeps the _d0_queued tracker exact
-            # (picked depth-0 leave the queue; requeued ones re-enter)
-            # with zero extra jobs
-            F.sum((F.col("depth") == 0).cast("int")).alias("n0"),
         )
 
         def _stat_job():
@@ -1379,13 +1356,6 @@ class Crawler:
         counts = {r["status"]: r["n"] for r in stat_rows}
         n_backoff = sum(r["nb"] or 0 for r in stat_rows)
         hit_stop = any(r["stop"] for r in stat_rows)
-        if self._d0_queued is not None:
-            d0_picked = sum(r["n0"] or 0 for r in stat_rows)
-            d0_requeued = sum(
-                r["n0"] or 0 for r in stat_rows
-                if r["status"] == STATUS_QUEUED
-            )
-            self._d0_queued += d0_requeued - d0_picked
         n_done = counts.get(STATUS_DONE, 0) + counts.get(STATUS_REDIRECTED, 0)
         self.total_done += n_done
 
@@ -1555,16 +1525,6 @@ class Crawler:
                     spark.read.schema(ORDER_SCHEMA).parquet(op)
                 )
         return c
-
-
-def _queued_counts(queued: DataFrame) -> tuple[int, int]:
-    """(rows, depth-0 rows) of queued frontier rows, in one aggregate."""
-    r = queued.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum((F.col("depth") == 0).cast("long")), F.lit(0))
-        .alias("n0"),
-    ).first()
-    return r["n"], int(r["n0"])
 
 
 def _extract_fetched(fetched: DataFrame) -> DataFrame:

@@ -9,9 +9,9 @@ become error-string resources.
 
 Spark shape: ``mapInPandas`` over the frontier batch — each task fetches
 its partition's urls sequentially (politeness already capped per-host
-batch sizes upstream; per-host co-location comes from the part_id/host
-partitioning, so one host's urls land in few tasks). stdlib urllib only —
-no extra dependencies; TLS/timeouts per standard library behavior.
+batch sizes upstream; the crawl hash-partitions the batch by host, so one
+host's urls land in one task). stdlib urllib only — no extra
+dependencies; TLS/timeouts per standard library behavior.
 
 This module is pure plumbing + policy; ``plans.crawl`` plugs it in via
 ``CrawlConfig.fetch_mode = "http"`` so the whole BSP loop (dedup,
@@ -119,8 +119,9 @@ def fetch_batch(urls: DataFrame, user_agent: str = "walk_spark/0.1",
     task tracks the last-GET time per host and sleeps the remainder of
     the delay before re-hitting that host. Politeness budgets upstream
     bound the per-superstep count; this bounds the instantaneous rate a
-    live server sees. Rows for one host land in few tasks (part_id/host
-    partitioning), so the per-task tracker is the per-host rate limiter.
+    live server sees. The tracker is per task, so it limits a host's rate
+    only when all of that host's rows share one partition — the crawl
+    hash-partitions its batch by host before calling this.
 
     ``host_delay_ms`` maps CANONICAL hosts (lowercase, port-less,
     www-stripped — ``functions.urlnorm.canonical_host``, the key the

@@ -259,14 +259,3 @@ def skewed_corpus(
         F.lit(None).cast("string").alias("redirect_to"),
     )
     return df
-
-
-def seed_urls_for(fixture: str) -> list[str]:
-    """Seed lists per fixture (seeds are enqueued RAW, not normalized —
-    reference lib/coordinator.go:174-178)."""
-    return {
-        "self_linking": ["http://self.test"],
-        "two_page": ["https://www.a.com"],
-        "tree_site": ["http://qri.test/"],
-        "redirect_chain": ["http://redir.test/r0", "http://redir.test/l0"],
-    }[fixture]
