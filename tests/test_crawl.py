@@ -169,6 +169,45 @@ def test_add_seeds_df_raw_url_normalized(spark):
     assert rows[0]["status"] == 200 and rows[0]["error"] is None
 
 
+def test_streamed_fetch_keys_stay_on_executors(spark):
+    """https and www urls streamed in with add_seeds_df are fetched under
+    their normal forms; their fetch keys stay in a DataFrame, and are
+    dropped by the next add_seeds_df once those urls have left the
+    queue."""
+    from walk_spark.plans.crawl import Crawler
+    raws = ["https://www.self.test/a.html", "https://self.test/b.html/"]
+    c = Crawler(spark, self_linking_pages(spark), CrawlConfig(
+        seeds=["http://self.test"], domains=["http://self.test"]))
+    c.run()
+    assert c.add_seeds_df(spark.createDataFrame(
+        [(u,) for u in raws], "url string")) == 2
+    assert dict(tuple(r) for r in c._seed_norm_df.collect()) == {
+        raws[0]: "http://self.test/a.html",
+        raws[1]: "http://self.test/b.html"}
+    rows = c.run().resources.filter(F.col("url").isin(raws)).collect()
+    assert sorted((x["url"], x["status"], x["error"]) for x in rows) == [
+        (u, 200, None) for u in sorted(raws)]
+    c.add_seeds_df(spark.createDataFrame(
+        [("http://self.test/new.html",)], "url string"))
+    assert c._seed_norm_df is None
+    c.close()
+
+
+def test_forgotten_raw_seed_refetched_once(spark):
+    """forget_urls drops a raw seed's fetch key, so re-adding the seed
+    leaves one key for it: the next run fetches it exactly once."""
+    from walk_spark.plans.crawl import Crawler
+    raw = "HTTP://WWW.Self.test/a.html"
+    c = Crawler(spark, self_linking_pages(spark), CrawlConfig(
+        seeds=[raw], domains=["http://self.test"]))
+    c.run()
+    assert c.forget_urls([raw]) == 1
+    c.add_seeds([raw])
+    rows = c.run().resources.filter(F.col("url") == raw).collect()
+    assert [(x["status"], x["error"]) for x in rows] == [(200, None)] * 2
+    c.close()
+
+
 def _outer_plan(df) -> list[str]:
     """``df``'s executed plan lines outside cached relations (the corpus
     prep ran when it was cached)."""
@@ -192,7 +231,7 @@ def test_add_seeds_df_normalized_urls_fetch_without_udf(spark):
     c.run()
     assert c.add_seeds_df(spark.createDataFrame(
         [("http://self.test/new.html",)], "url string")) == 1
-    assert not c._seed_norms
+    assert c._seed_norm_df is None
     outer = _outer_plan(c._fetch(c._pick_batch(c._queued)))
     evals = [ln for ln in outer if "ArrowEvalPython" in ln]
     assert len(evals) == 1 and "_extract_batch" in evals[0], outer
@@ -495,7 +534,7 @@ def test_fetch_extracts_hits_only(spark):
     c = Crawler(spark, self_linking_pages(spark), cfg)
     c.warm()
     c._ensure_state()
-    assert not c._seed_norms  # fixed-point seeds: no normalize UDF
+    assert c._seed_norm_df is None  # fixed-point seeds: no fetch keys
     outer = _outer_plan(c._fetch(c._pick_batch(c._queued)))
     evals = [ln for ln in outer if "ArrowEvalPython" in ln]
     assert len(evals) == 1 and "_extract_batch" in evals[0], outer

@@ -280,3 +280,37 @@ def test_http_crawl_paces_one_host_without_budget(spark):
         assert all(g >= 0.225 for g in gaps), gaps
     finally:
         srv.shutdown()
+
+
+def test_http_crawl_unpaced_batch_keeps_its_spread(spark, monkeypatch):
+    """With no delay in effect, one host's batch is not gathered into one
+    task: its urls reach fetch_batch over more than one partition."""
+    from pyspark.sql import functions as F
+
+    from walk_spark.config import CrawlConfig
+    from walk_spark.plans.crawl import crawl
+    from walk_spark.sources import http_fetch
+
+    spans = []
+    real = http_fetch.fetch_batch
+
+    def spy(urls, **kw):
+        spans.append(urls.select(F.spark_partition_id().alias("p"))
+                     .distinct().count())
+        return real(urls, **kw)
+
+    monkeypatch.setattr(http_fetch, "fetch_batch", spy)
+    _TimedHandler.times = []
+    srv = HTTPServer(("127.0.0.1", 0), _TimedHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_port}"
+    try:
+        cfg = CrawlConfig(
+            seeds=[f"{base}/s{i}.html" for i in range(8)], domains=[base],
+            fetch_mode="http", pin_partitions=4,
+        )
+        r = crawl(spark, None, cfg)
+        assert r.ok_resources().count() == 8
+        assert spans and spans[0] > 1, spans
+    finally:
+        srv.shutdown()

@@ -270,15 +270,16 @@ class Crawler:
         self._res_parts: list[DataFrame] = []
         self._order_parts: list[DataFrame] = []
         self._queued_count: int | None = None
-        #: the one record of fetch keys: raw url -> normal form, for every
-        #: depth-0 url ever enqueued whose normal form DIFFERS from the raw
-        #: string (well-formed seeds are fixed points and are omitted).
-        #: Filled where a depth-0 row enters the frontier — seed lists
-        #: (_seed_rows), add_seeds_df and the resumed snapshot — so
-        #: _fetch never runs the normalize UDF. Entries are never removed
-        #: (a key matches only its own raw url, never a depth>0 url — see
-        #: _fetch).
-        self._seed_norms: dict[str, str] = {}
+        #: the one record of fetch keys, pinned on the executors: rows
+        #: (url, _seed_norm) for queued depth-0 urls whose normal form
+        #: DIFFERS from the raw string (well-formed seeds are fixed points
+        #: and are omitted); None = no such url. Filled where a depth-0 row
+        #: enters the frontier — seed lists, add_seeds_df and the resumed
+        #: snapshot (_note_seed_norms) — so _fetch never runs the normalize
+        #: UDF. Each fold drops entries whose url has left the queue, so it
+        #: stays bounded by the queue, and no url of a stream reaches the
+        #: driver. Keys are unique: new rows anti-join the frontier, and
+        #: forget_urls drops its urls' entries.
         self._seed_norm_df: DataFrame | None = None
         #: standing URL-seen prefilter, DRIVER-owned {part_id: filter
         #: bytes} (cfg.seen_filter kind): built once from the frontier,
@@ -362,31 +363,49 @@ class Crawler:
             )
         return sel
 
-    def _note_seed_norms(self, pairs) -> None:
-        """Record ``(raw, normal form)`` pairs of enqueued depth-0 urls
-        whose normal form differs from the raw string."""
-        for u, n in pairs:
-            if n and n != u:
-                self._seed_norms[u] = n
-                self._seed_norm_df = None  # rebuilt lazily on next use
+    def _note_seed_norms(self, urls: list[str] | DataFrame) -> None:
+        """Fold the fetch keys of newly enqueued depth-0 urls into
+        ``_seed_norm_df``: a driver list (an operational seed list,
+        normalized here, ~µs per url) or queued frontier rows (one
+        normalize-UDF projection over their distinct depth-0 urls, on the
+        executors)."""
+        if isinstance(urls, list):
+            diffs = {u: n for u in urls if (n := normalize_url(u)) and n != u}
+            if not diffs:
+                return
+            new = self.spark.createDataFrame(
+                list(diffs.items()), "url string, _seed_norm string")
+        else:
+            n = _norm_udf(F.col("url"))
+            new = (
+                urls.filter(F.col("depth") == 0).select("url").distinct()
+                .select("url", n.alias("_seed_norm"))
+                .filter((F.length("_seed_norm") > 0)
+                        & (F.col("_seed_norm") != F.col("url")))
+            )
+        if self._seed_norm_df is not None:
+            live = self._queued.filter(F.col("depth") == 0).select("url")
+            new = self._seed_norm_df.join(
+                live, "url", "left_semi").unionByName(new)
+        self._keep_seed_norms(new)
 
-    def _note_seed_norms_df(self, rows: DataFrame) -> None:
-        """``_note_seed_norms`` over the depth-0 ``url``s of ``rows``: one
-        normalize-UDF projection whose collect carries only the urls whose
-        normal form differs, so already-normalized urls put nothing on the
-        driver."""
-        n = _norm_udf(F.col("url"))
-        self._note_seed_norms(
-            (r["url"], r["n"]) for r in
-            rows.filter(F.col("depth") == 0).select("url", n.alias("n"))
-            .filter(F.col("n") != F.col("url")).collect())
+    def _keep_seed_norms(self, m: DataFrame) -> None:
+        """Make ``m`` the fetch-key map (None when empty). The pin cuts
+        its lineage; the cache its count fills gives Spark the map's real
+        size, so the fetch join broadcasts a small map and shuffles a
+        large one."""
+        m = self._pin(m).cache()
+        if self._seed_norm_df is not None:
+            self._seed_norm_df.unpersist()
+        self._seed_norm_df = m
+        if m.count() == 0:
+            m.unpersist()
+            self._seed_norm_df = None
 
     def _seed_rows(self, seeds: list[str], seq0: int) -> DataFrame:
         """Depth-0 queued frontier rows for driver-side seeds, enqueued as
         the exact raw strings (not normalized — reference
-        lib/coordinator.go:174-178), seqs from ``seq0`` in list order.
-        Notes their normal forms for _fetch (~µs per seed, once)."""
-        self._note_seed_norms((u, normalize_url(u)) for u in seeds)
+        lib/coordinator.go:174-178), seqs from ``seq0`` in list order."""
         rows = [(u, None, 0, seq0 + i, STATUS_QUEUED, 0, 0, self.superstep,
                  0, self.cfg.job_id) for i, u in enumerate(seeds)]
         return self._with_host(
@@ -653,11 +672,15 @@ class Crawler:
 
         # the frontier's own status column ('queued') collides with the
         # HTTP status — it is a constant for batch rows, re-added after.
-        # One host's urls go to one task: fetch_batch paces a host only
-        # within a task, so a host spread over several concurrent tasks
-        # would be hit faster than its delay allows.
+        # When fetch_batch paces (a delay or robots overrides), one host's
+        # urls go to one task: it paces a host only within a task, so a
+        # host spread over concurrent tasks would be hit faster than its
+        # delay allows. Unpaced, the batch keeps its spread.
+        batch = batch.drop("status")
+        if cfg.http_delay_milli > 0 or self._robots_delay_ms:
+            batch = batch.repartition(self._pin_parts, "host")
         f = fetch_batch(
-            batch.drop("status").repartition(self._pin_parts, "host"),
+            batch,
             user_agent=cfg.user_agent,
             timeout_s=cfg.fetch_timeout_s,
             max_redirects=cfg.max_redirects,
@@ -680,7 +703,7 @@ class Crawler:
             )
         ok = F.col("error").isNull()
         return f.select(
-            *[c for c in batch.columns if c != "status"],
+            *batch.columns,
             F.lit(STATUS_QUEUED).alias("status"),
             _norm_udf(F.col("url")).alias("url_norm"),
             F.when(ok, _norm_udf(F.col("final_url"))).alias("final_url_norm"),
@@ -712,21 +735,16 @@ class Crawler:
         # so their url IS its normal form. Only depth-0 rows (seeds,
         # enqueued verbatim per lib/coordinator.go:174-178) can differ, and
         # their normal forms were computed once, where they entered the
-        # frontier (_seed_norms). No seed differs (well-formed seeds are
-        # fixed points): url_norm = url, no Python pass. Otherwise a
-        # broadcast of the (raw, norm) diffs plus coalesce — exact,
-        # because a non-fixed-point key cannot equal any depth>0 url.
-        if not self._seed_norms:
+        # frontier (_seed_norm_df). No queued seed differs (well-formed
+        # seeds are fixed points): url_norm = url, no Python pass.
+        # Otherwise a join with the pinned (raw, norm) diffs plus coalesce
+        # — exact, because a non-fixed-point key cannot equal any depth>0
+        # url. No broadcast hint: a streamed map can be large, and Spark
+        # broadcasts a small one on its own.
+        if self._seed_norm_df is None:
             b = batch.withColumn("url_norm", F.col("url"))
         else:
-            if self._seed_norm_df is None:
-                self._seed_norm_df = self.spark.createDataFrame(
-                    list(self._seed_norms.items()),
-                    "url string, _seed_norm string",
-                )
-            b = batch.join(
-                F.broadcast(self._seed_norm_df), "url", "left"
-            ).withColumn(
+            b = batch.join(self._seed_norm_df, "url", "left").withColumn(
                 "url_norm",
                 F.coalesce(F.col("_seed_norm"), F.col("url")),
             ).drop("_seed_norm")
@@ -833,12 +851,13 @@ class Crawler:
             self.resources = self.spark.createDataFrame([], RESOURCES_SCHEMA)
             self.order = self.spark.createDataFrame([], ORDER_SCHEMA)
             self.next_seq = self._queued_count = len(seeds)
+            self._note_seed_norms(seeds)
         elif self._queued is None:
             # state arrived as one snapshot (resume): its queued depth-0
             # rows may come from cfg.seeds, add_seeds or add_seeds_df —
             # note their normal forms once, from the rows themselves
             self._load_snapshot(self.frontier)
-            self._note_seed_norms_df(self._queued)
+            self._note_seed_norms(self._queued)
 
     def _load_snapshot(self, frontier: DataFrame) -> None:
         """State from one frontier snapshot (resume, durable checkpoint):
@@ -860,11 +879,13 @@ class Crawler:
             return
         fresh = self._seed_rows(seeds, self.next_seq).join(
             self.frontier.select("url"), "url", "left_anti")
-        n = fresh.count()
+        new_urls = [r["url"] for r in fresh.select("url").collect()]
+        n = len(new_urls)
         self.next_seq += len(seeds)  # seq values are unique, not dense
         if n:
             self._queued = self._pin(self._queued.unionByName(fresh))
             self._rebuild_frontier_view()
+            self._note_seed_norms(new_urls)
             if self._queued_count is not None:
                 self._queued_count += n
 
@@ -880,11 +901,11 @@ class Crawler:
         the batch and against the frontier; ``discovery_seq`` values are
         assigned deterministically in URL sort order (a DataFrame has no
         arrival order) via the same two-phase range rank the crawl loop
-        uses — no single-partition window. The driver receives the P-row
-        offset map, the new-url count and, from one normalize-UDF pass
-        over the enqueued rows, only the urls whose normal form differs
-        (the fetch keys _fetch needs); a stream of already-normalized urls
-        puts no url on the driver.
+        uses — no single-partition window, no collect of the urls (the
+        only driver data is the P-row offset map, the new-url count and
+        whether the fetch-key map is empty). The new urls' normal forms
+        are computed once here, by one normalize-UDF projection whose
+        differing (raw, norm) pairs stay pinned on the executors.
         Stream redelivery is idempotent: re-delivered urls anti-join away.
         """
         self._ensure_state()
@@ -914,7 +935,7 @@ class Crawler:
         self._queued = self._pin(self._queued.unionByName(rows))
         self._rebuild_frontier_view()
         # the new rows are the pinned queue's seqs from seq0 on
-        self._note_seed_norms_df(
+        self._note_seed_norms(
             self._queued.filter(F.col("discovery_seq") >= seq0))
         if self._queued_count is not None:
             self._queued_count += n
@@ -960,6 +981,8 @@ class Crawler:
             else:
                 self._filters = None
         self._queued = self._pin(self._queued.filter(~hit))
+        if self._seed_norm_df is not None:  # keeps map keys unique
+            self._keep_seed_norms(self._seed_norm_df.filter(~hit))
         self._term_parts = [p.filter(~hit) for p in self._term_parts]
         self._rebuild_frontier_view()
         if self._queued_count is not None:

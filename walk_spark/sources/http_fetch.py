@@ -9,9 +9,9 @@ become error-string resources.
 
 Spark shape: ``mapInPandas`` over the frontier batch — each task fetches
 its partition's urls sequentially (politeness already capped per-host
-batch sizes upstream; the crawl hash-partitions the batch by host, so one
-host's urls land in one task). stdlib urllib only — no extra
-dependencies; TLS/timeouts per standard library behavior.
+batch sizes upstream; when it paces, the crawl hash-partitions the batch
+by host, so one host's urls land in one task). stdlib urllib only — no
+extra dependencies; TLS/timeouts per standard library behavior.
 
 This module is pure plumbing + policy; ``plans.crawl`` plugs it in via
 ``CrawlConfig.fetch_mode = "http"`` so the whole BSP loop (dedup,
@@ -121,7 +121,8 @@ def fetch_batch(urls: DataFrame, user_agent: str = "walk_spark/0.1",
     bound the per-superstep count; this bounds the instantaneous rate a
     live server sees. The tracker is per task, so it limits a host's rate
     only when all of that host's rows share one partition — the crawl
-    hash-partitions its batch by host before calling this.
+    hash-partitions its batch by host before calling this whenever a
+    delay is in effect.
 
     ``host_delay_ms`` maps CANONICAL hosts (lowercase, port-less,
     www-stripped — ``functions.urlnorm.canonical_host``, the key the

@@ -33,9 +33,10 @@ def stream_seed_crawler(crawler: Crawler, seeds_stream: DataFrame,
     built-in sinks can't express (our MERGE-style frontier update).
 
     Seed ingest goes through ``Crawler.add_seeds_df`` — anti-join + union
-    + tracked count, never a collect — so a firehose micro-batch (100k+
-    urls) enqueues without materializing the urls on the driver (the list
-    path, ``add_seeds``, remains for operational use)."""
+    + tracked count, and one normalize pass whose fetch keys stay pinned
+    on the executors, never a collect of urls — so a firehose micro-batch
+    (100k+ urls) enqueues without materializing the urls on the driver
+    (the list path, ``add_seeds``, remains for operational use)."""
 
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
         n_new = crawler.add_seeds_df(batch_df)
